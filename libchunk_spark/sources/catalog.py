@@ -16,6 +16,7 @@ this seam is identical (SURVEY.md §7).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -26,6 +27,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 
@@ -55,6 +57,19 @@ def config_fingerprint(obj: Any) -> str:
 
     blob = json.dumps(enc(obj), sort_keys=True).encode()
     return hashlib.sha256(blob).hexdigest()[:16]
+
+
+def _footer_rows(path: str) -> list[dict]:
+    """Per-write-task row counts of a parquet directory, read from the
+    part-file footers (``part-<task>-<uuid>...``; with partitionBy one task
+    writes a file per partition directory, summed here)."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for f in glob.glob(os.path.join(path, "**", "part-*"), recursive=True):
+        task = int(os.path.basename(f).split("-")[1])
+        rows[task] = rows.get(task, 0) + pq.ParquetFile(f).metadata.num_rows
+    return [{"partition": p, "rows": n} for p, n in sorted(rows.items())]
 
 
 @dataclass
@@ -92,9 +107,11 @@ class StageCatalog:
     ) -> DataFrame:
         """Write df as the stage checkpoint (skip if already complete).
 
-        Metrics are captured per partition via an ``observe`` pass plus a
-        partition-id rollup so the manifest records where the rows live —
-        the per-partition lineage demanded by north_rule.
+        The write is the only job: the manifest's per-partition row counts
+        come from the parquet footers of the part files just written (one
+        entry per write task), and the stored schema lets read_stage skip
+        Spark's schema-inference job. The Iceberg path rolls the counts up
+        from a re-read instead.
         """
         spark = df.sparkSession
         if self.is_complete(stage, fingerprint):
@@ -105,18 +122,19 @@ class StageCatalog:
         t0 = time.time()
         if self.iceberg_catalog:
             df.writeTo(f"{self.iceberg_catalog}.{stage}").createOrReplace()
+            part_metrics = [
+                {"partition": int(r["p"]), "rows": int(r["rows"])}
+                for r in self.read_stage(spark, stage)
+                .groupBy(F.spark_partition_id().alias("p"))
+                .agg(F.count("*").alias("rows"))
+                .collect()
+            ]
         else:
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
-        out = self.read_stage(spark, stage)
-        part_metrics = [
-            {"partition": int(r["p"]), "rows": int(r["rows"])}
-            for r in out.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        ]
+            part_metrics = _footer_rows(path)
         manifest = {
             "stage": stage,
             "snapshot_id": snapshot_id,
@@ -124,6 +142,7 @@ class StageCatalog:
             "inputs": inputs or [],
             "rows": sum(m["rows"] for m in part_metrics),
             "partitions": part_metrics,
+            "schema": df.schema.json(),
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "complete": True,
@@ -132,7 +151,7 @@ class StageCatalog:
         with open(self._manifest_path(stage), "w") as f:
             json.dump(manifest, f, indent=1)
         self._manifests[stage] = manifest
-        return out
+        return self.read_stage(spark, stage)
 
     def _table_name(self, stage: str) -> str:
         """Catalog-safe table identifier, scoped by the catalog root so two
@@ -212,7 +231,10 @@ class StageCatalog:
         # spec and re-introduce the Exchange the write paid to avoid
         if m and m.get("table") and spark.catalog.tableExists(m["table"]):
             return spark.table(m["table"])
-        return spark.read.parquet(self._dir(stage))
+        reader = spark.read
+        if m and m.get("schema"):
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(self._dir(stage))
 
     def merge_append(
         self,

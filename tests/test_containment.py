@@ -123,3 +123,19 @@ def test_verify_builds_each_container_sa_once():
     got = {(r.a, r.b) for r in out.itertuples()}
     assert got == {(1, 9), (2, 9), (9, 10)}  # absent_needle rejected
     assert set(out["container"]) == {9, 10}
+
+
+def test_verify_width_follows_parallelism(spark):
+    """The verify buckets are 2 * defaultParallelism wide (scan's rule):
+    wide enough to use every core, not so wide that tiny inputs pay a
+    fixed Python-worker start per empty task."""
+    import re
+
+    corpus = corpus_to_spark(spark, generate_corpus(n_files=10, seed=3))
+    cands = spark.createDataFrame(
+        [(0, 1, 1, 1, 1)], "a long, b long, shared long, n_a long, n_b long"
+    )
+    ver = verify_containment(cands, corpus)
+    plan = ver._jdf.queryExecution().executedPlan().toString()
+    width = 2 * spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(bucket#\d+L, {width}\)", plan), plan

@@ -406,6 +406,76 @@ def test_connected_components_chain_converges(spark):
     assert comp.count() == n + 1
 
 
+_CC_CASES = {
+    "basic": test_connected_components_basic,
+    "union_find_0": lambda spark: test_connected_components_matches_union_find(
+        spark, 0
+    ),
+    "union_find_1": lambda spark: test_connected_components_matches_union_find(
+        spark, 1
+    ),
+    "incremental_7": lambda spark: test_update_components_equals_full_recluster(
+        spark, 7
+    ),
+    "cross_partition": test_local_contract_cross_partition_components_merge,
+    "contract_on_off": test_connected_components_contract_on_off_equal,
+    "blocked_flush": test_local_contract_blocked_flush_preserves_cc,
+    "chain": test_connected_components_chain_converges,
+}
+
+
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """Force the large-star/small-star rounds: with the local-finish bound
+    at 0 edges, connected_components collects nothing to the driver until
+    the rounds reach their fixpoint."""
+    from libchunk_spark.operators import components
+
+    monkeypatch.setattr(components, "BLOCK_EDGES", 0)
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_star_rounds(spark, star_rounds, case):
+    """The CC tests above run on the local finish (their graphs are far
+    below BLOCK_EDGES); the same checks must hold on the distributed
+    rounds that big graphs take."""
+    _CC_CASES[case](spark)
+
+
+def test_connected_components_no_fixpoint_raises(spark, star_rounds):
+    """A chain needs several rounds; capped at one, the rounds must raise
+    instead of returning a partial labelling."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "a long, b long"
+    ).repartition(16)
+    with pytest.raises(RuntimeError, match="no fixpoint in 1 rounds"):
+        connected_components(edges, max_iterations=1, contract=False)
+
+
+def test_connected_components_jobs_independent_of_diameter(spark):
+    """Below BLOCK_EDGES a CC call runs a fixed number of jobs: a 200-node
+    chain (diameter 199) costs exactly what a 200-node star (diameter 2)
+    costs, where the star rounds would pay more rounds for the chain."""
+    n = 200
+    graphs = {
+        "chain": [(i, i + 1) for i in range(n - 1)],
+        "star": [(0, i) for i in range(1, n)],
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for name, pairs in graphs.items():
+        edges = spark.createDataFrame(pairs, "a long, b long")
+        group = f"cc-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = connected_components(edges).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert sorted(tuple(r) for r in rows) == [(i, 0) for i in range(n)]
+    assert jobs["chain"] == jobs["star"], jobs
+
+
 def test_star_edges_preserve_connectivity(spark):
     """Star mode must yield identical components to allpairs mode, and the
     allpairs degradation counter must be observable."""

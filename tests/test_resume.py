@@ -192,6 +192,32 @@ def test_manifest_has_lineage_and_metrics(spark, corpus, tmp_path_factory):
     assert m["partitions"] and all("rows" in p for p in m["partitions"])
 
 
+def test_write_stage_runs_only_the_write(spark, tmp_path_factory):
+    """write_stage's manifest counts come from the part-file footers and its
+    re-read uses the stored schema, so the parquet write is the only job:
+    no partition-id rollup, no schema inference."""
+    root = str(tmp_path_factory.mktemp("ckpt_jobs"))
+    df = spark.createDataFrame(
+        [(i, f"k{i}") for i in range(100)], "id long, k string"
+    ).repartition(3)
+    sc = spark.sparkContext
+    sc.setJobGroup("write-stage", "write-stage")
+    try:
+        out = StageCatalog(root=root).write_stage("s", df, "fp")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("write-stage")
+    # AQE runs the repartition's shuffle map stage as a job of its own
+    assert len(jobs) <= 2, jobs
+    m = StageCatalog(root=root).manifest("s")
+    assert m["rows"] == 100 and len(m["partitions"]) == 3
+    assert sum(p["rows"] for p in m["partitions"]) == 100
+    assert out.schema == df.schema
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        tuple(r) for r in df.collect()
+    )
+
+
 def test_merge_insert_sql_construction():
     """Jar-free coverage of the MERGE branch's statement logic (execution
     itself is gated on the Iceberg runtime jar, absent in this sandbox —
