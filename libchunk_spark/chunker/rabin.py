@@ -73,27 +73,6 @@ class Chunk:
     cut_fp: int  # uint64 digest at the cut
 
 
-def rolling_digests(data: np.ndarray, cfg: ChunkerConfig) -> np.ndarray:
-    """Windowed digest at every position >= window-1.
-
-    Returns D of length ``n - window + 1`` where ``D[i]`` is the Rabin
-    fingerprint of ``data[i : i + window]`` — equal to the reference's
-    running digest when at least ``window`` bytes of the current chunk have
-    been hashed. O(n) memory — prefer the blocked candidate scans
-    (_scan_all / _first_candidate) for large payloads; kept as the simple
-    reference formulation and for downstream position-level analyses.
-    """
-    t = window_tables(cfg.pol, cfg.window)
-    n = data.shape[0]
-    w = cfg.window
-    if n < w:
-        return np.empty(0, dtype=np.uint64)
-    out = t[0][data[: n - w + 1]].copy()
-    for j in range(1, w):
-        out ^= t[j][data[j : j + n - w + 1]]
-    return out
-
-
 _SCAN_BLOCK = 1 << 14  # positions per block: narrow accumulators, L2-resident
 # (sized for MANY concurrent executor threads sharing L3 — larger blocks are
 # marginally faster solo but collapse under 32-way cache contention)

@@ -113,8 +113,24 @@ def simhash(hashes: np.ndarray, cfg: SignatureConfig) -> int:
     return int(sig)
 
 
-def simhash_batch(hash_sets: list[np.ndarray], cfg: SignatureConfig) -> np.ndarray:
-    return np.array([simhash(h, cfg) for h in hash_sets], dtype=np.uint64)
+def _i64(u: int) -> int:
+    """Reinterpret uint64 as int64 (two's complement) for LongType columns."""
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
+def signature_row(
+    hashes: np.ndarray, cfg: SignatureConfig
+) -> tuple[list[int], int, list[int], int]:
+    """(minhash, simhash, bands, n_shingles) of one shingle-hash set, with
+    the uint64 values reinterpreted as the int64 the LongType columns hold
+    — the one computation behind the signature UDF and the fused pass."""
+    sig = minhash_signature(hashes, cfg)
+    return (
+        [_i64(int(x)) for x in sig],
+        _i64(simhash(hashes, cfg)),
+        [_i64(int(x)) for x in band_hashes(sig, cfg)],
+        int(hashes.size),
+    )
 
 
 def band_hashes(sig: np.ndarray, cfg: SignatureConfig) -> np.ndarray:

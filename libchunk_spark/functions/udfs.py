@@ -4,8 +4,6 @@
   flat chunk rows with sha256 K-keys. Emitting the exploded table from
   Python avoids the Generate operator, which copies every parent column
   into each output row (measured 5-10x slowdown on wide content columns).
-* chunk_offsets_udf — offsets-only variant (array<struct> return) kept for
-  callers that want payload derivation JVM-side via substring.
 * signature_udf — MinHash signature + SimHash + LSH band hashes per row,
   computed from the fine-grained shingle chunking in one pass.
 """
@@ -23,23 +21,10 @@ from pyspark.sql.pandas.functions import pandas_udf
 from libchunk_spark.chunker.rabin import ChunkerConfig, chunk_batch
 from libchunk_spark.config import SignatureConfig
 from libchunk_spark.functions.signatures import (
-    band_hashes,
-    minhash_signature,
+    _i64,
     shingle_hashes_batch,
-    simhash,
+    signature_row,
 )
-
-CHUNK_OFFSETS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("start", T.LongType()),
-            T.StructField("length", T.IntegerType()),
-            T.StructField("cut_fp", T.LongType()),
-        ]
-    )
-)
-
 
 SIGNATURE_TYPE = T.StructType(
     [
@@ -57,39 +42,6 @@ def _as_bytes(v) -> bytes:
     if isinstance(v, (bytes, bytearray)):
         return bytes(v)
     return bytes(v)
-
-
-def _i64(u: int) -> int:
-    """Reinterpret uint64 as int64 (two's complement) for LongType columns."""
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def make_chunk_offsets_udf(cfg: ChunkerConfig):
-    """pandas UDF: binary content -> array<struct<pos,start,length,cut_fp>>.
-
-    Iterator form so the (pickled) chunker tables are materialized once per
-    executor task, not per batch.
-    """
-
-    def fn(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            payloads = [_as_bytes(v) for v in s]
-            all_chunks = chunk_batch(payloads, cfg)
-            out = [
-                [
-                    {
-                        "pos": i,
-                        "start": c.start,
-                        "length": c.length,
-                        "cut_fp": _i64(c.cut_fp),
-                    }
-                    for i, c in enumerate(chunks)
-                ]
-                for chunks in all_chunks
-            ]
-            yield pd.Series(out)
-
-    return pandas_udf(fn, CHUNK_OFFSETS_TYPE)
 
 
 CHUNK_ROWS_SCHEMA = (
@@ -179,15 +131,9 @@ def make_signature_udf(shingle_cfg: ChunkerConfig, sig_cfg: SignatureConfig):
         for s in batches:
             payloads = [_as_bytes(v) for v in s]
             hash_sets = shingle_hashes_batch(payloads, shingle_cfg)
-            mh, sh, bh, ns = [], [], [], []
-            for hs in hash_sets:
-                sig = minhash_signature(hs, sig_cfg)
-                mh.append([_i64(int(x)) for x in sig])
-                sh.append(_i64(simhash(hs, sig_cfg)))
-                bh.append([_i64(int(x)) for x in band_hashes(sig, sig_cfg)])
-                ns.append(int(hs.size))
+            rows = [signature_row(hs, sig_cfg) for hs in hash_sets]
             yield pd.DataFrame(
-                {"minhash": mh, "simhash": sh, "bands": bh, "n_shingles": ns}
+                rows, columns=["minhash", "simhash", "bands", "n_shingles"]
             )
 
     return pandas_udf(fn, SIGNATURE_TYPE)

@@ -32,12 +32,12 @@ from pyspark.sql import functions as F
 from libchunk_spark.config import PipelineConfig
 from libchunk_spark.chunker.rabin import chunk_batch
 from libchunk_spark.functions.signatures import (
-    band_hashes,
-    minhash_signature,
+    _i64,
     shingle_hashes_batch,
-    simhash,
+    signature_row,
 )
-from libchunk_spark.functions.udfs import _as_bytes, _i64
+from libchunk_spark.functions.udfs import _as_bytes
+from libchunk_spark.operators.split import chunk_index_of, file_keys_of
 
 FUSED_SCHEMA = (
     "file_id long, pos int, start long, length int, cut_fp long, k string, "
@@ -75,10 +75,7 @@ def chunk_and_sign(
             for fid, data, chunks, hs in zip(
                 pdf["file_id"], payloads, all_chunks, hash_sets
             ):
-                sig = minhash_signature(hs, cfg.signature)
-                mh = [_i64(int(x)) for x in sig]
-                sh = _i64(simhash(hs, cfg.signature))
-                bh = [_i64(int(x)) for x in band_hashes(sig, cfg.signature)]
+                mh, sh, bh, ns = signature_row(hs, cfg.signature)
                 csha = hashlib.sha256(data).hexdigest()
                 if not chunks:  # empty file: signature-only row
                     cols["file_id"].append(fid)
@@ -90,7 +87,7 @@ def chunk_and_sign(
                     cols["minhash"].append(mh)
                     cols["simhash"].append(sh)
                     cols["bands"].append(bh)
-                    cols["n_shingles"].append(int(hs.size))
+                    cols["n_shingles"].append(ns)
                     cols["content_sha256"].append(csha)
                     if keep_payload:
                         cols["chunk"].append(None)
@@ -107,7 +104,7 @@ def chunk_and_sign(
                     cols["minhash"].append(mh if first else None)
                     cols["simhash"].append(sh if first else None)
                     cols["bands"].append(bh if first else None)
-                    cols["n_shingles"].append(int(hs.size) if first else None)
+                    cols["n_shingles"].append(ns if first else None)
                     cols["content_sha256"].append(csha if first else None)
                     if keep_payload:
                         cols["chunk"].append(piece)
@@ -132,40 +129,15 @@ def fused_chunks(fused: DataFrame) -> DataFrame:
 
 def fused_chunk_index(fused: DataFrame) -> DataFrame:
     """One row per distinct k (idempotent-put semantics, bolt.go:52-55)."""
-    cols = ["k", "length", "cut_fp"] + (
-        ["chunk"] if "chunk" in fused.columns else []
-    )
-    return (
-        fused.where(F.col("k").isNotNull()).select(*cols).dropDuplicates(["k"])
-    )
+    return chunk_index_of(fused_chunks(fused))
 
 
 def fused_file_keys(fused: DataFrame) -> DataFrame:
     """(file_id, content_sha256, n_chunks, keys[]) — same shape as
     split().file_keys, derived without touching the corpus again (the
     content sha rides the fused frame's pos==0 rows)."""
-    grouped = (
-        fused.where(F.col("k").isNotNull())
-        .groupBy("file_id")
-        .agg(
-            F.count("*").cast("int").alias("n_chunks"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "k"))),
-                lambda s: s.k,
-            ).alias("keys"),
-        )
-    )
-    return (
-        fused.where(F.col("pos") == 0)
-        .select("file_id", "content_sha256")
-        .join(grouped, "file_id", "left")
-        .select(
-            "file_id",
-            "content_sha256",
-            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.coalesce("keys", F.array().cast("array<string>")).alias("keys"),
-        )
-    )
+    shas = fused.where(F.col("pos") == 0).select("file_id", "content_sha256")
+    return file_keys_of(fused_chunks(fused), shas)
 
 
 def fused_signatures(fused: DataFrame) -> DataFrame:

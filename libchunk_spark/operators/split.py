@@ -55,10 +55,30 @@ def split(
     if materialize:
         chunks = chunks.localCheckpoint()
 
-    # idempotent-put semantics (bits/store/bolt.go:52-55): one row per k
-    index_cols = ["k", "length", "cut_fp"] + (["chunk"] if keep_payload else [])
-    chunk_index = chunks.select(*index_cols).dropDuplicates(["k"])
+    shas = corpus.select(
+        "file_id",
+        F.sha2(utf8_bytes(F.col("content")), 256).alias("content_sha256"),
+    )
+    return SplitResult(
+        chunks=chunks,
+        chunk_index=chunk_index_of(chunks),
+        file_keys=file_keys_of(chunks, shas),
+    )
 
+
+def chunk_index_of(chunks: DataFrame) -> DataFrame:
+    """(k, length, cut_fp[, chunk]) — one row per distinct k: idempotent-put
+    semantics (bits/store/bolt.go:52-55). The payload column rides along
+    when the chunk rows carry it."""
+    cols = ["k", "length", "cut_fp"] + (
+        ["chunk"] if "chunk" in chunks.columns else []
+    )
+    return chunks.select(*cols).dropDuplicates(["k"])
+
+
+def file_keys_of(chunks: DataFrame, shas: DataFrame) -> DataFrame:
+    """(file_id, content_sha256, n_chunks, keys[]) from the chunk rows and
+    a (file_id, content_sha256) frame with one row per file."""
     grouped = chunks.groupBy("file_id").agg(
         F.count("*").cast("int").alias("n_chunks"),
         # order is data: sort (pos, k) structs, project k — replaces the
@@ -69,17 +89,9 @@ def split(
     )
     # left join keeps zero-chunk (empty content) files: they get an empty key
     # list, mirroring the reference (empty stream -> zero keys -> empty join)
-    file_keys = (
-        corpus.select(
-            "file_id",
-            F.sha2(utf8_bytes(F.col("content")), 256).alias("content_sha256"),
-        )
-        .join(grouped, "file_id", "left")
-        .select(
-            "file_id",
-            "content_sha256",
-            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.coalesce("keys", F.array().cast("array<string>")).alias("keys"),
-        )
+    return shas.join(grouped, "file_id", "left").select(
+        "file_id",
+        "content_sha256",
+        F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
+        F.coalesce("keys", F.array().cast("array<string>")).alias("keys"),
     )
-    return SplitResult(chunks=chunks, chunk_index=chunk_index, file_keys=file_keys)

@@ -16,10 +16,6 @@ cheap projections of that parquet; `chunks` is a non-checkpointed projection
 content scan dominates (SCALE.md §1) — this halves it vs the previous
 two-pass layout. Reference analog: the put path reads the stream once
 (/root/reference/bits/put.go:51-77).
-
-Resume compatibility: checkpoints written by the pre-fused layout (a
-complete `chunks` stage, no `fused` stage) are still honored — the legacy
-branch derives exactly as before instead of rescanning the corpus.
 """
 
 from __future__ import annotations
@@ -46,7 +42,6 @@ from libchunk_spark.operators.lsh import (
     minhash_candidate_edges,
     simhash_candidate_edges,
 )
-from libchunk_spark.operators.sign import sign
 from libchunk_spark.sources.catalog import StageCatalog, config_fingerprint
 
 
@@ -105,39 +100,21 @@ def run_pipeline(
         return catalog.write_stage(name, builder(), fp, inputs=inputs, **kw)
 
     # stage 1: chunk+sign — ONE content pass (put + signatures fused)
-    legacy = not catalog.is_complete("fused", fp) and catalog.is_complete(
-        "chunks", fp
+    fused = stage(
+        "fused",
+        lambda: chunk_and_sign(corpus, cfg, keep_payload=True),
+        ["corpus"],
     )
-    if legacy:
-        # pre-fused checkpoint layout: everything already on disk, derive
-        # exactly as the old two-pass pipeline did (no corpus rescan)
-        skipped.append("chunks")
-        chunks = catalog.read_stage(spark, "chunks")
-        chunk_index = stage(
-            "chunk_index", lambda: _rebuild_index(chunks), ["chunks"]
-        )
-        file_keys = stage(
-            "file_keys",
-            lambda: _rebuild_keys(corpus, chunks),
-            ["chunks", "corpus"],
-        )
-        signatures = stage("signatures", lambda: sign(corpus, cfg), ["corpus"])
-    else:
-        fused = stage(
-            "fused",
-            lambda: chunk_and_sign(corpus, cfg, keep_payload=True),
-            ["corpus"],
-        )
-        chunks = fused_chunks(fused)
-        chunk_index = stage(
-            "chunk_index", lambda: fused_chunk_index(fused), ["fused"]
-        )
-        file_keys = stage(
-            "file_keys", lambda: fused_file_keys(fused), ["fused"]
-        )
-        signatures = stage(
-            "signatures", lambda: fused_signatures(fused), ["fused"]
-        )
+    chunks = fused_chunks(fused)
+    chunk_index = stage(
+        "chunk_index", lambda: fused_chunk_index(fused), ["fused"]
+    )
+    file_keys = stage(
+        "file_keys", lambda: fused_file_keys(fused), ["fused"]
+    )
+    signatures = stage(
+        "signatures", lambda: fused_signatures(fused), ["fused"]
+    )
 
     # stage 2: candidate edges (minhash LSH ∪ simhash ∪ containment
     # ∪ optional winnowing)
@@ -211,32 +188,4 @@ def run_pipeline(
         stages_skipped=skipped,
         cluster_stats=cstats,
         shard_plan=splan,
-    )
-
-
-def _rebuild_index(chunks: DataFrame) -> DataFrame:
-    cols = [c for c in ["k", "length", "cut_fp", "chunk"] if c in chunks.columns]
-    return chunks.select(*cols).dropDuplicates(["k"])
-
-
-def _rebuild_keys(corpus: DataFrame, chunks: DataFrame) -> DataFrame:
-    from libchunk_spark.functions.udfs import utf8_bytes
-
-    grouped = chunks.groupBy("file_id").agg(
-        F.count("*").cast("int").alias("n_chunks"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "k"))), lambda s: s.k
-        ).alias("keys"),
-    )
-    return (
-        corpus.select(
-            "file_id", F.sha2(utf8_bytes(F.col("content")), 256).alias("content_sha256")
-        )
-        .join(grouped, "file_id", "left")
-        .select(
-            "file_id",
-            "content_sha256",
-            F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.coalesce("keys", F.array().cast("array<string>")).alias("keys"),
-        )
     )

@@ -4092,12 +4092,6 @@ def _grams3_all_of(t: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _grams3_all():
-    """single-expression multiset-3gram form (tests/short texts only —
-    re-splits per gram, see _grams3_of)"""
-    return _grams3_all_of(_tokens())
-
-
 def _tf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, tok, tf) 3-gram occurrence counts restricted to grams
     appearing in <= WJAC_DF_CAP documents.

@@ -307,10 +307,12 @@ def test_local_contract_cross_partition_components_merge(spark):
 
 
 def test_connected_components_contract_on_off_equal(spark):
-    """The contraction pre-pass is a pure optimization: assignments with
-    contract=True and contract=False must be identical (the A/B switch
-    VERDICT r05 next #3 measures with)."""
+    """The contraction pre-pass is a pure optimization: on a clique (the
+    shape it contracts), a chain and a random graph, the assignment must
+    equal the union-find oracle's min-id partition."""
     import random as _r
+
+    from libchunk_spark.oracle import UnionFind
 
     rng = _r.Random(5)
     edges = [(i, j) for i in range(20) for j in range(i + 1, 20)]  # clique
@@ -318,14 +320,17 @@ def test_connected_components_contract_on_off_equal(spark):
     edges += [
         (rng.randrange(200, 400), rng.randrange(200, 400)) for _ in range(100)
     ]
+    # self-loops stay in the input but connect nothing, so a node seen only
+    # in one gets no row
+    links = [(a, b) for a, b in edges if a != b]
+    nodes = sorted({n for e in links for n in e})
+    uf = UnionFind(nodes)
+    for a, b in links:
+        uf.union(a, b)
+    want = sorted((n, uf.find(n)) for n in nodes)  # min-root convention
     edf = spark.createDataFrame(edges, "a long, b long").repartition(7)
-    on = sorted(
-        tuple(r) for r in connected_components(edf, contract=True).collect()
-    )
-    off = sorted(
-        tuple(r) for r in connected_components(edf, contract=False).collect()
-    )
-    assert on == off and len(on) > 0
+    got = sorted(tuple(r) for r in connected_components(edf).collect())
+    assert got == want
 
 
 def test_contract_block_kernel_matches_union_find_hypothesis():
@@ -388,12 +393,8 @@ def test_local_contract_blocked_flush_preserves_cc(spark):
     # block_edges far below the partition's edge count -> many flushes;
     # out_chunk tiny -> many output frames per flush
     contracted = _local_contract(edf, block_edges=37, out_chunk=5)
-    want = sorted(
-        tuple(r) for r in connected_components(edf, contract=False).collect()
-    )
-    got = sorted(
-        tuple(r) for r in connected_components(contracted, contract=False).collect()
-    )
+    want = sorted(tuple(r) for r in connected_components(edf).collect())
+    got = sorted(tuple(r) for r in connected_components(contracted).collect())
     assert got == want
 
 
@@ -449,7 +450,7 @@ def test_connected_components_no_fixpoint_raises(spark, star_rounds):
         [(i, i + 1) for i in range(64)], "a long, b long"
     ).repartition(16)
     with pytest.raises(RuntimeError, match="no fixpoint in 1 rounds"):
-        connected_components(edges, max_iterations=1, contract=False)
+        connected_components(edges, max_iterations=1)
 
 
 def test_connected_components_jobs_independent_of_diameter(spark):

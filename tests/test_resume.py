@@ -85,32 +85,6 @@ def test_fused_stage_scans_content_once(spark, corpus, tmp_path_factory):
     assert hashlib.sha256(bytes(row["chunk"])).hexdigest() == row["k"]
 
 
-def test_legacy_two_pass_checkpoints_still_resume(spark, corpus, tmp_path_factory):
-    """Checkpoints written by the pre-fused layout (complete `chunks` stage,
-    no `fused`) must resume without rescanning the corpus — same answer."""
-    from libchunk_spark.operators.split import split
-    from libchunk_spark.sources.catalog import config_fingerprint as cfp
-
-    root = str(tmp_path_factory.mktemp("ckpt_legacy"))
-    cat = StageCatalog(root=root)
-    fp = cfp(CFG)
-    # simulate the old layout: a complete chunks stage on disk
-    cat.write_stage(
-        "chunks", split(corpus, CFG.chunk).chunks, fp, inputs=["corpus"]
-    )
-    r = run_pipeline(corpus, CFG, StageCatalog(root=root), with_containment=False)
-    assert "chunks" in r.stages_skipped and "fused" not in r.stages_run
-    # answer equals a fresh fused-layout run
-    fresh = run_pipeline(
-        corpus, CFG,
-        StageCatalog(root=str(tmp_path_factory.mktemp("ckpt_fresh"))),
-        with_containment=False,
-    )
-    got = sorted((x["file_id"], x["component"]) for x in r.components.collect())
-    want = sorted((x["file_id"], x["component"]) for x in fresh.components.collect())
-    assert got == want
-
-
 def test_pipeline_empty_corpus(spark, tmp_path_factory):
     """A corpus partition with zero files (e.g. after a lang filter) must
     flow through every stage without error and yield empty outputs."""
