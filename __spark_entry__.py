@@ -31,7 +31,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     corpus = documents_as_corpus(spark, "/root/testdata/sf0.001")
     sigs = sign(corpus, DOCS_CONFIG)
-    edges = minhash_candidate_edges(sigs, DOCS_CONFIG).unionByName(
+    edges = minhash_candidate_edges(sigs).unionByName(
         simhash_candidate_edges(sigs, DOCS_CONFIG)
     )
     comp = connected_components(edges, all_nodes=corpus.select("file_id"))

@@ -313,7 +313,7 @@ def main() -> None:
             sigs_c = fused_c.where(F.col("pos") == 0).select(
                 "file_id", "minhash", "simhash", "bands", "n_shingles"
             )
-            edges = minhash_candidate_edges(sigs_c, CCFG).unionByName(
+            edges = minhash_candidate_edges(sigs_c).unionByName(
                 simhash_candidate_edges(sigs_c, CCFG)
             )
             comp = connected_components(edges, all_nodes=corpus.select("file_id"))

@@ -287,7 +287,7 @@ def worker(
             sigs = fused.where(F.col("pos") == 0).select(
                 "file_id", "minhash", "simhash", "bands", "n_shingles"
             )
-            edges = minhash_candidate_edges(sigs, CFG).unionByName(
+            edges = minhash_candidate_edges(sigs).unionByName(
                 simhash_candidate_edges(sigs, CFG)
             )
             comp = connected_components(edges, all_nodes=corpus.select("file_id"))

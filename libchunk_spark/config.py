@@ -62,7 +62,7 @@ class PipelineConfig:
     signature: SignatureConfig = field(default_factory=SignatureConfig)
     # exact-Jaccard threshold defining a "duplicate pair" (oracle + recall)
     jaccard_threshold: float = 0.7
-    # LSH buckets larger than this emit star edges around the min file_id
+    # SimHash blocks larger than this emit star edges around the min file_id
     # instead of all pairs (connectivity-preserving, kills quadratic blowup)
     bucket_pair_cap: int = 64
 

@@ -116,7 +116,9 @@ def allpairs_jaccard(tokens: DataFrame, threshold: float) -> DataFrame:
     # and xxhash64 is injective on this universe in practice (expected
     # collisions over 1e8 pair-token comparisons ~ 5e-12), so the count
     # — and therefore the rounded jac and the emitted pair set — is
-    # identical (equality pytest) while the verify joins shuffle 8-byte
+    # identical (tests/test_queries_batch7.py pins no collision over the
+    # sf0.01 + sf0.1 grams and hash == string verify on single-gram
+    # edits) while the verify joins shuffle 8-byte
     # longs instead of ~25-byte gram strings per element (measured
     # 7.8 -> 5.8 s at 10x scale; opt guide §2.3 "narrower types").
     arrays = tokens.select("doc_id", F.xxhash64("tok").alias("h")).groupBy(

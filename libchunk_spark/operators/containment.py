@@ -72,7 +72,6 @@ def containment_candidates(
     file_keys: DataFrame,
     containment_frac: float = 0.5,
     key_freq_cap: int = 64,
-    min_shared: int = 1,
 ) -> DataFrame:
     """(a, b, shared, n_a, n_b) candidate containment pairs via shared keys."""
     freq = chunks.groupBy("k").agg(F.count("*").alias("freq"))
@@ -98,13 +97,7 @@ def containment_candidates(
             counts.select(F.col("file_id").alias("b"), F.col("n_chunks").alias("n_b")),
             "b",
         )
-        .where(
-            (F.col("shared") >= min_shared)
-            & (
-                F.col("shared")
-                >= containment_frac * F.least("n_a", "n_b")
-            )
-        )
+        .where(F.col("shared") >= containment_frac * F.least("n_a", "n_b"))
         .select("a", "b", "shared", "n_a", "n_b")
     )
 

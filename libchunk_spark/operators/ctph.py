@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from libchunk_spark.chunker.rabin import ChunkerConfig
+from libchunk_spark.operators.overlap import df_capped, key_pairs
 from libchunk_spark.operators.split import split
 
 # base64url alphabet (RFC 4648 §5) — matches the K-key encoding family
@@ -97,8 +98,6 @@ def ctph_pairs(
     whose digests share that many aligned pieces, and the df cap stops
     boilerplate-heavy code runs from fanning out quadratically. Scoring
     is one levenshtein over <= CTPH_MAX_CODES-char strings per survivor."""
-    from pyspark.sql import Window
-
     d = digests.select(F.col(id_col).alias("id"), "digest").where(
         F.length("digest") >= ngram
     )
@@ -113,18 +112,7 @@ def ctph_pairs(
             )
         ).alias("g"),
     )
-    grams = (
-        grams.withColumn("df", F.count("*").over(Window.partitionBy("g")))
-        .where(F.col("df") <= df_cap)
-        .drop("df")
-    )
-    cand = (
-        grams.alias("l")
-        .join(grams.alias("r"), "g")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
+    cand = key_pairs(df_capped(grams, "g", df_cap), "id", "g")
     da = d.select(F.col("id").alias("a"), F.col("digest").alias("da"))
     db = d.select(F.col("id").alias("b"), F.col("digest").alias("db"))
     return (

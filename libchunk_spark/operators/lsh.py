@@ -2,20 +2,16 @@
 
 Skew is the central scale problem here (SURVEY.md §4): boilerplate files put
 thousands of file_ids into one (band, band_hash) bucket, and a naive
-self-join is quadratic in bucket size. Two strategies:
+self-join is quadratic in bucket size. MinHash buckets therefore emit star
+edges: a bucket of size m only needs m-1 edges to preserve *connectivity* —
+every member is linked to the bucket's min file_id. Connected components
+over star edges reach exactly the same clusters as over all-pairs edges,
+with linear edge count. No bucket can explode. Pair-level consumers that
+need explicit pairs use the df-capped key self-join (operators/overlap.py)
+or the SimHash path below, whose oversized blocks degrade to star edges and
+are counted (`F.observe`), never silently dropped.
 
-* star mode (default, used for clustering): a bucket of size m only needs
-  m-1 edges to preserve *connectivity* — every member is linked to the
-  bucket's min file_id. Connected components over star edges reach exactly
-  the same clusters as over all-pairs edges, with linear edge count. No
-  bucket can explode.
-
-* allpairs mode (for pair-level consumers that need explicit pairs, e.g.
-  Jaccard verification): buckets up to `cap` emit all pairs; oversized
-  buckets are degraded to star edges and counted — truncation is observable
-  (`F.observe`), never silent.
-
-Both modes repartition on the band-hash key before grouping (north_rule:
+Both paths repartition on the band-hash key before grouping (north_rule:
 explicit repartitioning on band-hash keys keeps shuffle skew bounded; the
 min/count aggregations are partial-agg friendly so skewed buckets combine
 map-side).
@@ -29,94 +25,42 @@ from pyspark.sql import functions as F
 from libchunk_spark.config import PipelineConfig
 
 
-def band_rows(signatures: DataFrame, shuffle_partitions: int | None = None) -> DataFrame:
+def band_rows(signatures: DataFrame) -> DataFrame:
     """Exploded LSH band rows: (band, band_hash, file_id)."""
-    rows = signatures.select(
+    return signatures.select(
         "file_id", F.posexplode("bands").alias("band", "band_hash")
-    )
-    if shuffle_partitions:
-        rows = rows.repartition(shuffle_partitions, "band", "band_hash")
-    else:
-        rows = rows.repartition("band", "band_hash")
-    return rows
+    ).repartition("band", "band_hash")
 
 
-def minhash_candidate_edges(
-    signatures: DataFrame,
-    cfg: PipelineConfig,
-    mode: str = "star",
-    observation=None,
-) -> DataFrame:
-    """Candidate dup edges (a, b), a < b, from MinHash LSH buckets.
-
-    In allpairs mode, pass a ``pyspark.sql.Observation`` to record how many
-    rows/buckets were degraded to star edges (metrics `oversized_rows` /
-    `oversized_blocks`, recorded when the plan executes)."""
+def minhash_candidate_edges(signatures: DataFrame) -> DataFrame:
+    """Candidate dup edges (a, b), a < b: star edges from every MinHash LSH
+    bucket to its min file_id."""
     rows = band_rows(signatures)
-    if mode == "star":
-        reps = rows.groupBy("band", "band_hash").agg(
-            F.min("file_id").alias("rep"), F.count("*").alias("sz")
-        )
-        edges = (
-            rows.join(reps.where(F.col("sz") > 1), ["band", "band_hash"])
-            .where(F.col("file_id") != F.col("rep"))
-            .select(F.col("rep").alias("a"), F.col("file_id").alias("b"))
-            .dropDuplicates(["a", "b"])
-        )
-        return edges
-    if mode == "allpairs":
-        return _allpairs_with_cap(rows, cfg.bucket_pair_cap, observation)
-    raise ValueError(f"unknown mode {mode!r}")
-
-
-def _allpairs_with_cap(rows: DataFrame, cap: int, observation=None) -> DataFrame:
-    sized = rows.join(
-        rows.groupBy("band", "band_hash").agg(F.count("*").alias("sz")),
-        ["band", "band_hash"],
+    reps = rows.groupBy("band", "band_hash").agg(
+        F.min("file_id").alias("rep"), F.count("*").alias("sz")
     )
-    small = sized.where(F.col("sz") <= cap).drop("sz")
-    big = sized.where(F.col("sz") > cap).drop("sz")
-    if observation is not None:
-        big = big.observe(
-            observation,
-            F.count(F.lit(1)).alias("oversized_rows"),
-            # DISTINCT aggregates are rejected in observed metrics; the HLL
-            # sketch is plenty for a degradation signal.
-            F.approx_count_distinct(
-                F.concat_ws(":", "band", "band_hash")
-            ).alias("oversized_blocks"),
-        )
-    l, r = small.alias("l"), small.alias("r")
-    pair_edges = (
-        l.join(r, ["band", "band_hash"])
-        .where(F.col("l.file_id") < F.col("r.file_id"))
-        .select(F.col("l.file_id").alias("a"), F.col("r.file_id").alias("b"))
-    )
-    # oversized buckets degrade to connectivity-preserving star edges
-    big_reps = big.groupBy("band", "band_hash").agg(F.min("file_id").alias("rep"))
-    star_edges = (
-        big.join(big_reps, ["band", "band_hash"])
+    return (
+        rows.join(reps.where(F.col("sz") > 1), ["band", "band_hash"])
         .where(F.col("file_id") != F.col("rep"))
         .select(F.col("rep").alias("a"), F.col("file_id").alias("b"))
+        .dropDuplicates(["a", "b"])
     )
-    return pair_edges.unionByName(star_edges).dropDuplicates(["a", "b"])
 
 
 def simhash_candidate_edges(
     signatures: DataFrame,
     cfg: PipelineConfig,
-    radius: int | None = None,
     observation=None,
 ) -> DataFrame:
     """Fuzzy-dup edges from SimHash multi-index blocks + hamming filter.
 
     64-bit simhash split into `simhash_blocks` equal blocks; files equal in
     >=1 block are candidates (pigeonhole: hamming <= blocks-1 is guaranteed
-    found); candidates are verified with bit_count(a^b) <= radius JVM-side.
+    found); candidates are verified with bit_count(a^b) <= blocks-1 JVM-side.
 
     Oversized blocks (sz > bucket_pair_cap) degrade to connectivity-preserving
-    star edges around the block's min file_id — the same policy as the minhash
-    `_allpairs_with_cap` path — still subject to the hamming-radius verify.
+    star edges around the block's min file_id — the same policy as the
+    minhash buckets — still subject to the hamming-radius verify.
     A block of 10k near-identical simhashes thus yields 10k-1 edges instead of
     ~5e7 (or, before this fix, zero). Pass a ``pyspark.sql.Observation`` as
     `observation` to count degraded rows (`oversized_rows` /
@@ -128,7 +72,6 @@ def simhash_candidate_edges(
     nothing to read — treat a missing metric as zero degradation.
     """
     sig = cfg.signature
-    radius = sig.simhash_blocks - 1 if radius is None else radius
     width = sig.simhash_bits // sig.simhash_blocks
     mask = (1 << width) - 1
     blocks = signatures.select(
@@ -188,5 +131,5 @@ def simhash_candidate_edges(
     )
     cand = pair_cand.unionByName(star_cand).dropDuplicates(["a", "b"])
     return cand.where(
-        F.bit_count(F.expr("sa ^ sb")) <= F.lit(radius)
+        F.bit_count(F.expr("sa ^ sb")) <= F.lit(sig.simhash_blocks - 1)
     ).select("a", "b")

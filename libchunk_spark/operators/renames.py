@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from libchunk_spark.operators.overlap import df_capped
 from libchunk_spark.operators.winnow import (
     WINNOW_K,
     WINNOW_W,
@@ -123,13 +124,7 @@ def rename_pairs(
     fps_all = winnow_fingerprints(
         un, id_col="rid", text_col="content", k=k, w=w, hasher=hasher
     )
-    from pyspark.sql import Window
-
-    fps = (
-        fps_all.withColumn("df", F.count("*").over(Window.partitionBy("fp")))
-        .where(F.col("df") <= df_cap)
-        .drop("df")
-    )
+    fps = df_capped(fps_all, "fp", df_cap)
     # sizes from the UNCAPPED sets (ADVICE r06: capped sizing inflates
     # containment for boilerplate-heavy files)
     sizes = fps_all.groupBy("rid").agg(F.count("*").alias("sz"))

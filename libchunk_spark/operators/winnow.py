@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from libchunk_spark.operators.overlap import df_capped, shared_counts, with_sizes
+
 # Guarantee threshold t = WINNOW_W + WINNOW_K - 1 = 11 chars: any common
 # substring of >= 11 chars shares a fingerprint (collision-free hashes).
 WINNOW_K = 8  # char k-gram width
@@ -191,12 +193,10 @@ def winnow_pair_scores(
     Scale shape: fingerprints with document frequency > df_cap are
     dropped BEFORE the self-join (boilerplate headers otherwise fan out
     quadratically); the df-cap window and both join sides reuse one
-    exchange over the exploded fingerprints (final-plan-asserted in
-    tests; the sizes agg is a separate cheap doc-keyed count). A single
-    shared 11-char substring is a weak dup signal, so consumers threshold
-    on `score`, not mere co-occurrence."""
-    from pyspark.sql import Window
-
+    exchange over the exploded fingerprints (operators/overlap.py; the
+    sizes agg is a separate cheap doc-keyed count). A single shared
+    11-char substring is a weak dup signal, so consumers threshold on
+    `score`, not mere co-occurrence."""
     fps_all = winnow_fingerprints(
         df, id_col=id_col, text_col=text_col, k=k, w=w, hasher=hasher
     )
@@ -206,24 +206,10 @@ def winnow_pair_scores(
         # pipeline (the dominant cost) would run twice. One bounded
         # materialization (the distinct (id, fp) rows) feeds both.
         fps_all = fps_all.localCheckpoint()
-    fps = (
-        fps_all.withColumn("df", F.count("*").over(Window.partitionBy("fp")))
-        .where(F.col("df") <= df_cap)
-        .drop("df")
-    )
+    pairs = shared_counts(df_capped(fps_all, "fp", df_cap), id_col, "fp")
     sizes = fps_all.groupBy(id_col).agg(F.count("*").alias("sz"))
-    pairs = (
-        fps.alias("l")
-        .join(fps.alias("r"), "fp")
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(
-            F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
-        )
-        .agg(F.count("*").alias("shared"))
-    )
     return (
-        pairs.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("nb")), "b")
+        with_sizes(pairs, sizes)
         .withColumn("score", F.round(F.col("shared") / F.least("na", "nb"), 4))
         .select("a", "b", "shared", "score")
     )

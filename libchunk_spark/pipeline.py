@@ -88,7 +88,7 @@ def run_pipeline(
     skipped: list[str] = []
     spark = corpus.sparkSession
 
-    def stage(name: str, builder, inputs: list[str], **kw) -> DataFrame:
+    def stage(name: str, builder, inputs: list[str]) -> DataFrame:
         if catalog.is_complete(name, fp):
             skipped.append(name)
             return catalog.read_stage(spark, name)
@@ -97,7 +97,7 @@ def run_pipeline(
             return catalog.write_stage_bucketed(
                 name, builder(), fp, ["k"], index_buckets, inputs=inputs
             )
-        return catalog.write_stage(name, builder(), fp, inputs=inputs, **kw)
+        return catalog.write_stage(name, builder(), fp, inputs=inputs)
 
     # stage 1: chunk+sign — ONE content pass (put + signatures fused)
     fused = stage(
@@ -119,7 +119,7 @@ def run_pipeline(
     # stage 2: candidate edges (minhash LSH ∪ simhash ∪ containment
     # ∪ optional winnowing)
     def _edges():
-        e = minhash_candidate_edges(signatures, cfg).withColumn(
+        e = minhash_candidate_edges(signatures).withColumn(
             "source", F.lit("minhash")
         )
         e = e.unionByName(

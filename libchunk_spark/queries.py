@@ -20,6 +20,12 @@ from pyspark.sql import functions as F
 
 from libchunk_spark.config import DOCS_CONFIG
 from libchunk_spark.operators.assemble import assemble
+from libchunk_spark.operators.overlap import (
+    df_capped,
+    key_pairs,
+    shared_counts,
+    with_sizes,
+)
 from libchunk_spark.operators.split import split
 from libchunk_spark.scan import read_parallel
 
@@ -324,49 +330,35 @@ GROUP BY doc_id
 NGRAM_DF_CAP = 64
 
 
+def _capped_gram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b, shared, na, nb) over the word-3gram sets restricted to grams
+    with document frequency <= NGRAM_DF_CAP; shared by the Jaccard and
+    containment pair queries, which differ only in the score."""
+    # _grams3 is array_distinct per doc, so the cap's row count per gram
+    # == document frequency
+    grams = df_capped(
+        _gram_rows(_docs(spark, sf_dir), "doc_id"), "gram", NGRAM_DF_CAP
+    )
+    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    return with_sizes(shared_counts(grams, "doc_id", "gram"), sizes)
+
+
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3gram Jaccard pairs >= threshold over df-capped grams.
 
     Semantics: Jaccard over the gram sets restricted to grams with document
     frequency <= NGRAM_DF_CAP — identical restriction in the DuckDB oracle,
     so values match. The cap bounds the gram self-join: no gram can fan out
-    to more than cap^2/2 pairs, killing the boilerplate blowup at scale.
-
-    The cap is a window count over the gram partition (not a groupBy+join):
-    one exchange on gram that the l/r self-join then REUSES (ReusedExchange
-    in the plan), so the expensive gram explosion is computed once, not four
-    times.
+    to more than cap^2/2 pairs, killing the boilerplate blowup at scale
+    (operators/overlap.py: the cap's exchange is reused by both join
+    sides).
     """
-    from pyspark.sql import Window
-
-    grams_all = _gram_rows(_docs(spark, sf_dir), "doc_id")
-    # _grams3 is array_distinct per doc, so count over the gram partition
-    # == document frequency
-    grams = (
-        grams_all.withColumn(
-            "df", F.count("*").over(Window.partitionBy("gram"))
-        )
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .drop("df")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    l = grams.alias("l")
-    r = grams.alias("r")
-    inter = (
-        l.join(r, "gram")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(
-            F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb")), "b")
+        _capped_gram_overlap(spark, sf_dir)
         .withColumn(
             "jac",
             F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
+                F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4
             ),
         )
         .where(F.col("jac") >= NGRAM_JACCARD_THRESHOLD)
@@ -406,38 +398,13 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Catches the quote-inclusion / partial-copy cases symmetric Jaccard
     misses: a short doc fully embedded in a long one has containment 1.0
-    but Jaccard ~ |A|/|B|. Same bounded gram self-join (df cap reused as a
-    window count), so the plan's cost envelope is identical to the Jaccard
-    query; only the denominator changes.
+    but Jaccard ~ |A|/|B|. Same bounded gram self-join, so the plan's cost
+    envelope is identical to the Jaccard query; only the denominator
+    changes.
     """
-    from pyspark.sql import Window
-
-    grams_all = _gram_rows(_docs(spark, sf_dir), "doc_id")
-    grams = (
-        grams_all.withColumn(
-            "df", F.count("*").over(Window.partitionBy("gram"))
-        )
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .drop("df")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    l = grams.alias("l")
-    r = grams.alias("r")
-    inter = (
-        l.join(r, "gram")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(
-            F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb")), "b")
-        .withColumn(
-            "cont",
-            F.round(F.col("inter") / F.least("na", "nb"), 4),
-        )
+        _capped_gram_overlap(spark, sf_dir)
+        .withColumn("cont", F.round(F.col("shared") / F.least("na", "nb"), 4))
         .where(F.col("cont") >= NGRAM_CONTAINMENT_THRESHOLD)
         .select("a", "b", "cont")
     )
@@ -526,14 +493,7 @@ def q_lsh_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg ... ORDER BY perm), so the whole path is ONE aggregation
     shuffle + the band-bucket self-join; no collect_list re-aggregation.
     """
-    bands = _band_sigs(spark, sf_dir)
-    l, r = bands.alias("l"), bands.alias("r")
-    return (
-        l.join(r, ["band", "band_sig"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    return key_pairs(_band_sigs(spark, sf_dir), "doc_id", ["band", "band_sig"])
 
 
 SQL_LSH_BAND_PAIRS = f"""
@@ -602,13 +562,9 @@ def q_supershingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, one tiny (a, b) aggregation over rows the candidate join already
     produced.
     """
-    bands = _band_sigs(spark, sf_dir)
-    l, r = bands.alias("l"), bands.alias("r")
     return (
-        l.join(r, ["band", "band_sig"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .agg(F.count("*").alias("n_shared_bands"))
+        shared_counts(_band_sigs(spark, sf_dir), "doc_id", ["band", "band_sig"])
+        .withColumnRenamed("shared", "n_shared_bands")
         .where(F.col("n_shared_bands") >= MIN_SHARED_BANDS)
     )
 
@@ -2219,11 +2175,10 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowed-fingerprint near-dup pairs: docs sharing selected
     fingerprints, scored by containment shared/min(|A|,|B|) >= 0.5.
 
-    Scale shape mirrors q_ngram_jaccard_pairs: ONE exchange on fp computes
-    the document-frequency cap (window count) and is REUSED by both sides
-    of the self-join, so the gram explosion runs once; the df-cap bounds
-    any fingerprint's fan-out to <= cap^2/2 pairs (license-header
-    boilerplate fingerprints are dropped on both engines identically)."""
+    Scale shape mirrors q_ngram_jaccard_pairs (operators/overlap.py): the
+    df-cap bounds any fingerprint's fan-out to <= cap^2/2 pairs
+    (license-header boilerplate fingerprints are dropped on both engines
+    identically)."""
     from libchunk_spark.operators.winnow import winnow_pair_scores
 
     return winnow_pair_scores(
@@ -2316,31 +2271,12 @@ def q_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline (or per-source MinHash via operators/sign.py) bounds it."""
     grams = _gram_rows(_docs(spark, sf_dir), "source").distinct()
     sizes = grams.groupBy("source").agg(F.count("*").alias("sz"))
-    inter = (
-        grams.alias("l")
-        .join(grams.alias("r"), "gram")
-        .where(F.col("l.source") < F.col("r.source"))
-        .groupBy(
-            F.col("l.source").alias("src_a"), F.col("r.source").alias("src_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(
-            sizes.select(F.col("source").alias("src_a"), F.col("sz").alias("na")),
-            "src_a",
-        )
-        .join(
-            sizes.select(F.col("source").alias("src_b"), F.col("sz").alias("nb")),
-            "src_b",
-        )
-        .select(
-            "src_a",
-            "src_b",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
-            ).alias("jac"),
-        )
+    return with_sizes(shared_counts(grams, "source", "gram"), sizes).select(
+        F.col("a").alias("src_a"),
+        F.col("b").alias("src_b"),
+        F.round(
+            F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")), 4
+        ).alias("jac"),
     )
 
 
@@ -3698,14 +3634,8 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint the gram-explode + md5 + 16-min aggregation subplan runs
     # three times (no exchange reuse across different partitionings).
     wide = _minhash_wide(spark, sf_dir).localCheckpoint()
-    bands = _band_sigs_of(wide)
-    l, r = bands.alias("l"), bands.alias("r")
-    pairs = (
-        l.join(r, ["band", "band_sig"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )  # == q_lsh_band_pairs over the same wide frame
+    # == q_lsh_band_pairs over the same wide frame
+    pairs = key_pairs(_band_sigs_of(wide), "doc_id", ["band", "band_sig"])
     wa = wide.select(
         F.col("doc_id").alias("a"),
         *[F.col(f"mh{i}").alias(f"xa{i}") for i in range(N_PERMS_SQL)],
@@ -3732,24 +3662,10 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram stream), so the explode runs only for the intersection join
     # (whose l/r sides share one exchange on gram).
     sizes = wide.select("doc_id", "sz")
-    l, r = grams.alias("l"), grams.alias("r")
-    inter = (
-        l.join(r, "gram")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .agg(F.count("*").alias("i"))
-    )
-    scored = (
-        est.join(inter, ["a", "b"], "left")
-        .join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb")), "b")
-        .select(
-            "est",
-            (
-                F.coalesce("i", F.lit(0))
-                / (F.col("na") + F.col("nb") - F.coalesce("i", F.lit(0)))
-            ).alias("jac"),
-        )
+    inter = shared_counts(grams, "doc_id", "gram")
+    shared = F.coalesce("shared", F.lit(0))
+    scored = with_sizes(est.join(inter, ["a", "b"], "left"), sizes).select(
+        "est", (shared / (F.col("na") + F.col("nb") - shared)).alias("jac")
     )
     return scored.agg(
         F.count("*").alias("n_pairs"),
@@ -3943,7 +3859,7 @@ def _minhash_prod_scored(spark, sf_dir, agree_fn, correction=None):
     # (3x measured). Bounded: one row per doc (128 longs + bands).
     sigs = sign(corpus, DOCS_CONFIG).localCheckpoint()
     pairs = (
-        minhash_candidate_edges(sigs, DOCS_CONFIG)
+        minhash_candidate_edges(sigs)
         .select("a", "b")
         .localCheckpoint()  # reused by est AND cand_docs (different keys)
     )
@@ -3978,24 +3894,10 @@ def _minhash_prod_scored(spark, sf_dir, agree_fn, correction=None):
         .localCheckpoint()
     )
     sizes = sh.groupBy("file_id").agg(F.count("*").alias("sz"))
-    inter = (
-        sh.select(F.col("file_id").alias("a"), "sh")
-        .join(sh.select(F.col("file_id").alias("b"), "sh"), "sh")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("i"))
-    )
-    scored = (
-        est.join(inter, ["a", "b"], "left")
-        .join(sizes.select(F.col("file_id").alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col("file_id").alias("b"), F.col("sz").alias("nb")), "b")
-        .select(
-            "est",
-            (
-                F.coalesce("i", F.lit(0))
-                / (F.col("na") + F.col("nb") - F.coalesce("i", F.lit(0)))
-            ).alias("jac"),
-        )
+    inter = shared_counts(sh, "file_id", "sh")
+    shared = F.coalesce("shared", F.lit(0))
+    scored = with_sizes(est.join(inter, ["a", "b"], "left"), sizes).select(
+        "est", (shared / (F.col("na") + F.col("nb") - shared)).alias("jac")
     )
     return corpus, scored
 
@@ -4101,11 +4003,9 @@ def _tf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows (every word's df scales with corpus size, so at sf0.1 virtually
     all tokens cap out and the pair set collapses to empty — measured),
     while a content-bearing gram's df tracks its duplicate family, the
-    same scale argument q_ngram_jaccard_pairs already rides. The df cap
-    is a window count over the gram partition so the gram explosion is
-    exchanged ONCE and the downstream self-join reuses it."""
-    from pyspark.sql import Window
-
+    same scale argument q_ngram_jaccard_pairs already rides. The cap's
+    exchange is reused by the downstream self-join (operators/overlap.py).
+    """
     tf = (
         _docs(spark, sf_dir)
         .select("doc_id", _tokens().alias("_t"))
@@ -4113,11 +4013,7 @@ def _tf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
     )
-    return (
-        tf.withColumn("df", F.count("*").over(Window.partitionBy("tok")))
-        .where(F.col("df") <= WJAC_DF_CAP)
-        .drop("df")
-    )
+    return df_capped(tf, "tok", WJAC_DF_CAP)
 
 
 def _weighted_pair_scores(tf: DataFrame) -> DataFrame:
@@ -4132,15 +4028,9 @@ def _weighted_pair_scores(tf: DataFrame) -> DataFrame:
         .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .agg(F.sum(F.least("l.tf", "r.tf")).alias("wmin"))
     )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("nb")), "b")
-        .withColumn(
-            "wjac",
-            F.round(
-                F.col("wmin") / (F.col("na") + F.col("nb") - F.col("wmin")), 4
-            ),
-        )
+    return with_sizes(inter, sizes).withColumn(
+        "wjac",
+        F.round(F.col("wmin") / (F.col("na") + F.col("nb") - F.col("wmin")), 4),
     )
 
 
@@ -4594,8 +4484,6 @@ def q_rename_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the exact tier joins on sha256 (skew-free crypto keys);
     the fuzzy tier reuses the df-capped gram self-join envelope of
     q_ngram_jaccard_pairs, restricted old-side x new-side."""
-    from pyspark.sql import Window
-
     docs = _docs(spark, sf_dir).select(
         "doc_id", "text", F.sha2(F.encode("text", "UTF-8"), 256).alias("sha")
     )
@@ -4617,14 +4505,7 @@ def q_rename_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny (doc_id, sha) map instead (identical result: osha/nsha is
     # constant within a pair, so filtering pairs after counting equals
     # filtering rows before).
-    grams_all = _gram_rows(docs, "doc_id")
-    grams = (
-        grams_all.withColumn(
-            "df", F.count("*").over(Window.partitionBy("gram"))
-        )
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .drop("df")
-    )
+    grams = df_capped(_gram_rows(docs, "doc_id"), "gram", NGRAM_DF_CAP)
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
     go = grams.where(F.col("doc_id") % 2 == 1).select(
         F.col("doc_id").alias("old_id"), "gram"

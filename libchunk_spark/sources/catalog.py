@@ -61,12 +61,12 @@ def config_fingerprint(obj: Any) -> str:
 
 def _footer_rows(path: str) -> list[dict]:
     """Per-write-task row counts of a parquet directory, read from the
-    part-file footers (``part-<task>-<uuid>...``; with partitionBy one task
-    writes a file per partition directory, summed here)."""
+    part-file footers (``part-<task>-<uuid>...``; a task that rolled over
+    to several files is summed)."""
     import pyarrow.parquet as pq
 
     rows: dict[int, int] = {}
-    for f in glob.glob(os.path.join(path, "**", "part-*"), recursive=True):
+    for f in glob.glob(os.path.join(path, "part-*")):
         task = int(os.path.basename(f).split("-")[1])
         rows[task] = rows.get(task, 0) + pq.ParquetFile(f).metadata.num_rows
     return [{"partition": p, "rows": n} for p, n in sorted(rows.items())]
@@ -103,7 +103,6 @@ class StageCatalog:
         df: DataFrame,
         fingerprint: str,
         inputs: list[str] | None = None,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Write df as the stage checkpoint (skip if already complete).
 
@@ -130,10 +129,7 @@ class StageCatalog:
                 .collect()
             ]
         else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
+            df.write.mode("overwrite").parquet(path)
             part_metrics = _footer_rows(path)
         manifest = {
             "stage": stage,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 from libchunk_spark.chunker.rabin import ChunkerConfig
+from libchunk_spark.operators.overlap import df_capped
 from libchunk_spark.operators.split import split
 
 CORPUS_SCHEMA = (
@@ -285,8 +286,6 @@ def start_neardup_flagging(
     distinct (new, old) pairs, same cap — see
     tests/test_streaming_multimodal.py::test_streaming_neardup_flags.
     """
-    from pyspark.sql import Window
-
     from libchunk_spark.operators.sign import sign
 
     if band_index_path is None:
@@ -299,14 +298,9 @@ def start_neardup_flagging(
             F.posexplode("bands").alias("band", "band_hash"),
         )
     )
-    w = Window.partitionBy("band", "band_hash")
-    (
-        idx_bands_all.withColumn("bf", F.count("*").over(w))
-        .where(F.col("bf") <= band_freq_cap)
-        .drop("bf")
-        .write.mode("overwrite")
-        .parquet(band_index_path)
-    )
+    df_capped(idx_bands_all, ["band", "band_hash"], band_freq_cap).write.mode(
+        "overwrite"
+    ).parquet(band_index_path)
     idx_bands = spark.read.parquet(band_index_path)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
@@ -401,8 +395,6 @@ def _cross_edges(
         of each batch band), so shuffle work per trigger is
         O(batch + matched rows), independent of corpus history.
     """
-    from pyspark.sql import Window
-
     # the probe's bucket values: <= band_buckets ints, collected from the
     # (localCheckpointed) batch bands — a driver-side list IS the point,
     # it becomes a partition filter the scan prunes files with
@@ -422,12 +414,7 @@ def _cross_edges(
     )
     batch_keys = new_bands.select("band", "band_hash").distinct()
     matched = old_rows.join(F.broadcast(batch_keys), ["band", "band_hash"])
-    w = Window.partitionBy("band", "band_hash")
-    capped = (
-        matched.withColumn("bf", F.count("*").over(w))
-        .where(F.col("bf") <= band_freq_cap)
-        .drop("bf")
-    )
+    capped = df_capped(matched, ["band", "band_hash"], band_freq_cap)
     return new_bands.join(capped, ["band", "band_hash"]).select(
         F.least("file_id", "old_id").alias("a"),
         F.greatest("file_id", "old_id").alias("b"),

@@ -24,7 +24,7 @@ def setup(spark):
     corpus = corpus_to_spark(spark, rows).cache()
     sigs = sign(corpus, CFG)
     comp = connected_components(
-        minhash_candidate_edges(sigs, CFG), all_nodes=corpus.select("file_id")
+        minhash_candidate_edges(sigs), all_nodes=corpus.select("file_id")
     ).cache()
     return rows, corpus, comp
 

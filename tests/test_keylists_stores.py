@@ -102,7 +102,7 @@ def test_lsh_path_has_no_python_udf(spark):
         "file_id long, minhash array<long>, simhash long, bands array<long>, n_shingles int",
     )
     plan = (
-        minhash_candidate_edges(sigs, CFG)
+        minhash_candidate_edges(sigs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

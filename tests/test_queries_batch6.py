@@ -28,6 +28,26 @@ def test_weighted_jaccard_reuses_the_tf_exchange(spark):
     assert "ReusedExchange" in plan, plan
 
 
+@pytest.mark.parametrize(
+    "query", [Q.q_ngram_jaccard_pairs, Q.q_ngram_containment_pairs]
+)
+def test_ngram_pairs_reuse_the_cap_exchange(spark, query):
+    """The df-cap window and both gram self-join sides read ONE exchange
+    over the exploded grams (broadcast off = the 100 TB join shape)."""
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = query(spark, SF)
+        df.collect()  # AQE: reuse shows only in the final adaptive plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    assert "isFinalPlan=true" in plan, plan
+    # the sizes join reuses a doc_id exchange too; the cap's is the gram one
+    reused = [ln for ln in plan.splitlines() if "ReusedExchange" in ln]
+    assert any("Exchange hashpartitioning(gram#" in ln for ln in reused), plan
+
+
 def test_wminhash_samples_only_candidate_docs(spark):
     """Catalyst instantiates the sampling subplan once per join side (no
     cross-side CSE), so the Arrow UDF must sit ABOVE a semi-join prune to

@@ -177,7 +177,7 @@ def test_recall_vs_oracle(spark, corpus_rows, oracle):
     sigs = sign(corpus, CFG).cache()
     sp = split(corpus, CFG.chunk)
     edges = (
-        minhash_candidate_edges(sigs, CFG)
+        minhash_candidate_edges(sigs)
         .unionByName(simhash_candidate_edges(sigs, CFG))
         .unionByName(
             verify_containment(
@@ -478,29 +478,30 @@ def test_connected_components_jobs_independent_of_diameter(spark):
 
 
 def test_star_edges_preserve_connectivity(spark):
-    """Star mode must yield identical components to allpairs mode, and the
-    allpairs degradation counter must be observable."""
-    from pyspark.sql import Observation
+    """Star edges must yield the same components as every pair inside each
+    (band, band_hash) bucket of the same signatures (union-find oracle)."""
+    from libchunk_spark.oracle import UnionFind
 
     rows = generate_corpus(n_files=120, seed=77)
     corpus = corpus_to_spark(spark, rows).cache()
     sigs = sign(corpus, CFG).cache()
-    star = minhash_candidate_edges(sigs, CFG, mode="star")
-    allp = minhash_candidate_edges(sigs, CFG, mode="allpairs")
-    # the Observation is single-action: attach it to a dedicated instance
-    # (the CC loop below runs many actions, which an Observation rejects).
-    # Use a tiny cap so oversized buckets EXIST — when the observed branch
-    # is empty, AQE's empty-relation propagation can eliminate the
-    # CollectMetrics node and obs.get has nothing to read.
-    import dataclasses
-
-    obs = Observation("minhash_allpairs")
-    tiny = dataclasses.replace(CFG, bucket_pair_cap=2)
-    minhash_candidate_edges(sigs, tiny, mode="allpairs", observation=obs).count()
-    assert obs.get["oversized_rows"] > 0
-    c1 = connected_components(star, all_nodes=corpus.select("file_id"))
-    c2 = connected_components(allp, all_nodes=corpus.select("file_id"))
-    assert c1.exceptAll(c2).count() == 0 and c2.exceptAll(c1).count() == 0
+    star = minhash_candidate_edges(sigs)
+    got = {
+        r["file_id"]: r["component"]
+        for r in connected_components(
+            star, all_nodes=corpus.select("file_id")
+        ).collect()
+    }
+    buckets: dict[tuple[int, int], list[int]] = {}
+    for r in sigs.select("file_id", "bands").collect():
+        for band, h in enumerate(r["bands"]):
+            buckets.setdefault((band, h), []).append(r["file_id"])
+    uf = UnionFind([r.file_id for r in rows])
+    for members in buckets.values():
+        for i, a in enumerate(members):
+            for b in members[i + 1 :]:
+                uf.union(a, b)
+    assert got == {f: uf.find(f) for f in uf.parent}
 
 
 def test_simhash_oversized_block_star_fallback(spark):
