@@ -12,6 +12,11 @@ Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, plus
 The noop sink (guide §1.4) computes every column of every row and discards
 the result, so the timing isolates the computation from any output sink;
 jobs are labelled via setJobDescription (guide §1.5).
+
+`plans` mode builds each query, and building runs the query's eager
+in-query checkpoints (localCheckpoint) as Spark jobs. A dump therefore
+stops at each checkpoint's scan (an RDD scan node): the plan below it was
+already executed and is not in the file.
 """
 
 from __future__ import annotations

@@ -104,47 +104,62 @@ def _docs_corpus(
     )
 
 
+def _checkpoint_concurrently(*frames: DataFrame) -> list[DataFrame]:
+    """localCheckpoint each frame as its own concurrent driver-thread job
+    (guide §2.6): for materializations that are independent until a later
+    join, the cheaper one back-fills the executors the other's stage tails
+    leave idle. A plain pool thread starts with empty Spark local
+    properties, so each target is wrapped by
+    inheritable_thread_target(session): the checkpoint jobs keep the
+    caller's job group, description and tags."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    keep_props = inheritable_thread_target(frames[0].sparkSession)
+    with ThreadPoolExecutor(len(frames)) as ex:
+        futures = [ex.submit(keep_props(f.localCheckpoint)) for f in frames]
+        return [fut.result() for fut in futures]
+
+
 # ------------------------------------------------------------ text helpers
 
-def _tokens():
-    return F.split(F.col("text"), " ")
+def _tokens(text_col: str = "text") -> Column:
+    return F.split(F.col(text_col), " ")
 
 
-def _grams3_of(t: Column) -> Column:
-    """word 3-gram array (distinct), empty when < 3 tokens, built from an
-    ALREADY-MATERIALIZED token-array column. Catalyst performs no common-
-    subexpression elimination inside higher-order-function lambdas, so if
-    `t` is the inline split(text) expression the transform lambda re-splits
-    the ENTIRE text once per gram — O(tokens^2) characters per doc (the
-    winnowing O(n^2) md5 lesson, CLAUDE.md). Callers stage the token array
-    with _gram_rows; the multiply-referenced non-cheap alias also blocks
-    CollapseProject from fusing the split back into the lambda."""
+def _word_grams(t: Column, n: int) -> Column:
+    """Every word n-gram of the token array `t`, in order; empty below n
+    tokens. `t` must be an ALREADY-STAGED token-array column: Catalyst
+    performs no common-subexpression elimination inside higher-order-
+    function lambdas, so if `t` is the inline split(text) expression the
+    transform lambda re-splits the ENTIRE text once per gram — O(tokens^2)
+    characters per doc (the winnowing O(n^2) md5 lesson, CLAUDE.md).
+    _gram_rows stages it; the multiply-referenced non-cheap alias also
+    blocks CollapseProject from fusing the split back into the lambda."""
     return F.when(
-        F.size(t) >= 3,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - 3),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, 3)),
-            )
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(t) - n),
+            lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _grams3():
-    """Single-expression word-3gram array (tests/short texts only — in a
-    query use _gram_rows: this inline form re-splits per gram, see
-    _grams3_of)."""
-    return _grams3_of(_tokens())
+def _gram_rows(
+    df: DataFrame, *cols: str, n: int = 3, distinct: bool = True,
+    text_col: str = "text",
+) -> DataFrame:
+    """(cols..., gram) rows of the word n-grams of df[text_col] — each
+    row's distinct grams, or every occurrence when not `distinct` — with
+    the token array staged as its own projection first (split runs once
+    per doc, not once per gram; see _word_grams)."""
+    staged = df.select(*cols, _tokens(text_col).alias("_t"))
+    grams = _word_grams(F.col("_t"), n)
+    if distinct:
+        grams = F.array_distinct(grams)
+    return staged.select(*cols, F.explode(grams).alias("gram"))
 
-
-def _gram_rows(df: DataFrame, *cols: str) -> DataFrame:
-    """(cols..., gram) exploded distinct word-3grams of df.text with the
-    token array staged as its own projection first (split runs once per
-    doc, not once per gram)."""
-    staged = df.select(*cols, _tokens().alias("_t"))
-    return staged.select(
-        *cols, F.explode(_grams3_of(F.col("_t"))).alias("gram")
-    )
 
 # portable 60-bit gram hash: first 15 hex chars of md5 (identical in DuckDB)
 def _h60(col):
@@ -334,7 +349,7 @@ def _capped_gram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(a, b, shared, na, nb) over the word-3gram sets restricted to grams
     with document frequency <= NGRAM_DF_CAP; shared by the Jaccard and
     containment pair queries, which differ only in the score."""
-    # _grams3 is array_distinct per doc, so the cap's row count per gram
+    # _gram_rows is distinct per doc, so the cap's row count per gram
     # == document frequency
     grams = df_capped(
         _gram_rows(_docs(spark, sf_dir), "doc_id"), "gram", NGRAM_DF_CAP
@@ -996,22 +1011,14 @@ WHERE rank <= {TOPK_K}
 TOPK_IVF_RECALL_FLOOR = 0.9
 
 
-def _topk_recall_contract(spark, sf_dir, approx_fn) -> DataFrame:
+def _topk_recall_contract(spark, sf_dir, approx: DataFrame) -> DataFrame:
     """(n_exact, recall_ok) scaffolding shared by the IVF/PQ/IVFADC
     contracts: materialize the exact ranking and the approximate (q, cand)
-    set as CONCURRENT driver-thread jobs (guide §2.6 — they are
-    independent until the recall semi-join, and each feeds two consumers),
-    then join."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        f_exact = ex.submit(
-            lambda: q_topk_similar(spark, sf_dir)
-            .select("q", "cand")
-            .localCheckpoint()
-        )
-        f_approx = ex.submit(lambda: approx_fn().localCheckpoint())
-        exact, approx = f_exact.result(), f_approx.result()
+    set concurrently (they are independent until the recall semi-join,
+    and each feeds two consumers), then join."""
+    exact, approx = _checkpoint_concurrently(
+        q_topk_similar(spark, sf_dir).select("q", "cand"), approx
+    )
     hits = exact.join(approx, ["q", "cand"], "left_semi").agg(
         F.count("*").alias("n_hit")
     )
@@ -1046,7 +1053,7 @@ def q_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_recall_contract(
         spark,
         sf_dir,
-        lambda: topk_ivf(emb, queries, k=TOPK_K, n_cells=8, nprobe=5).select(
+        topk_ivf(emb, queries, k=TOPK_K, n_cells=8, nprobe=5).select(
             "q", "cand"
         ),
     )
@@ -1086,7 +1093,7 @@ def q_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_recall_contract(
         spark,
         sf_dir,
-        lambda: pq_topk(
+        pq_topk(
             emb, queries, k=TOPK_K, m=16, n_codes=64, shortlist=64
         ).select("q", "cand"),
     )
@@ -1108,7 +1115,7 @@ def q_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_recall_contract(
         spark,
         sf_dir,
-        lambda: pq_topk_ivf(
+        pq_topk_ivf(
             emb, queries, k=TOPK_K, m=16, n_codes=64, shortlist=64,
             n_cells=8, nprobe=5,
         ).select("q", "cand"),
@@ -1219,23 +1226,11 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    t = F.col("_t")
-    bigrams = _docs(spark, sf_dir, spread=False).select(
-        "doc_id", _tokens().alias("_t")
-    ).select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size(t) >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - 2),
-                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, 2)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("b"),
+    bigrams = _gram_rows(
+        _docs(spark, sf_dir, spread=False), "doc_id", n=2, distinct=False
     )
     bstats = (
-        bigrams.groupBy("doc_id", "b")
+        bigrams.groupBy("doc_id", "gram")
         .count()
         .groupBy("doc_id")
         .agg(F.sum("count").alias("n_bigrams"), F.max("count").alias("top_b"))
@@ -1324,28 +1319,12 @@ def q_decontam_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id (bounded by corpus row count, not shingle count).
     """
     docs = _docs(spark, sf_dir, spread=False)
-    w = DECONTAM_W
-    # token array staged as a column: the slice lambda must not re-split
-    # the text per shingle (no CSE inside HOF lambdas, see _grams3_of)
-    staged = docs.select("doc_id", _tokens().alias("_t"))
-    t = F.col("_t")
-    grams = staged.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size(t) >= w,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - w),
-                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, w)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("g"),
-    )
+    grams = _gram_rows(docs, "doc_id", n=DECONTAM_W, distinct=False)
     is_eval = F.col("doc_id") % 97 == 0
-    eval_grams = grams.where(is_eval).select("g").distinct()
+    eval_grams = grams.where(is_eval).select("gram").distinct()
     hits = (
         grams.where(~is_eval)
-        .join(F.broadcast(eval_grams), "g", "left_semi")
+        .join(F.broadcast(eval_grams), "gram", "left_semi")
         .select("doc_id")
         .distinct()
         .withColumn("hit", F.lit(True))
@@ -1797,26 +1776,23 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (count desc, ngram asc) tie-break. Scale shape: explode
     is map-side, the groupBy count is a partial-aggregate shuffle on the
     gram key, top-k is a TakeOrdered — no all-pairs anywhere."""
-    t = F.col("_t")
-    grams = F.when(
-        F.size(t) >= 5,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - 5),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, 5)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        _docs(spark, sf_dir)
-        # token array staged: the slice lambda must not re-split the text
-        # per 5-gram (no CSE inside HOF lambdas, see _grams3_of)
-        .select("doc_id", _tokens().alias("_t"))
-        .select("doc_id", F.explode(grams).alias("ngram"))
-        .groupBy("ngram")
-        .agg(F.count("*").alias("n_docs"))
+        ngram_doc_counts(_docs(spark, sf_dir), "text")
         .orderBy(F.desc("n_docs"), F.asc("ngram"))
         .limit(20)
+    )
+
+
+def ngram_doc_counts(docs: DataFrame, text_col: str) -> DataFrame:
+    """(ngram, n_docs): word 5-grams of a one-row-per-doc frame counted by
+    DISTINCT containing doc — the core of q_top_ngrams, shared with the
+    streaming maintainer (streaming/aggmaint.py::
+    start_topgrams_maintenance) so batch and maintained counts agree by
+    construction."""
+    return (
+        _gram_rows(docs, n=5, text_col=text_col)
+        .groupBy(F.col("gram").alias("ngram"))
+        .agg(F.count("*").alias("n_docs"))
     )
 
 
@@ -2538,23 +2514,13 @@ def q_lsh_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # each side feeds the tp join AND its own count — without a
     # checkpoint the whole ngram / banding pipeline runs twice per side.
-    # The two materializations are independent, so they run as concurrent
-    # driver-thread jobs (guide §2.6): the cheaper banding side back-fills
-    # executors the exact side's stage tails leave idle.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        f_truth = ex.submit(
-            lambda: q_ngram_jaccard_pairs(spark, sf_dir)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-        f_cand = ex.submit(
-            lambda: q_lsh_band_pairs(spark, sf_dir)
-            .select("a", "b")
-            .localCheckpoint()
-        )
-        truth, cand = f_truth.result(), f_cand.result()
+    # The two materializations are independent, so they run concurrently:
+    # the cheaper banding side back-fills executors the exact side's stage
+    # tails leave idle.
+    truth, cand = _checkpoint_concurrently(
+        q_ngram_jaccard_pairs(spark, sf_dir).select("a", "b"),
+        q_lsh_band_pairs(spark, sf_dir).select("a", "b"),
+    )
     tp = truth.join(cand, ["a", "b"]).agg(F.count("*").alias("tp"))
     nt = truth.agg(F.count("*").alias("n_truth"))
     nc = cand.agg(F.count("*").alias("n_cand"))
@@ -3380,8 +3346,8 @@ def passages_of(
         docs.select(
             F.col(id_col).alias("doc_id"),
             # staged token array: the window lambda must not re-split the
-            # text per passage (no CSE inside HOF lambdas, _grams3_of)
-            F.split(F.col(text_col), " ").alias("_t"),
+            # text per passage (no CSE inside HOF lambdas, _word_grams)
+            _tokens(text_col).alias("_t"),
         )
         .select(
             "doc_id",
@@ -3740,19 +3706,11 @@ def q_passage_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = q_passage_windows(spark, sf_dir).select("doc_id", "passage_sha")
     # each snapshot feeds three set operations (anti x2 / semi); without a
     # checkpoint the passage-extraction pipeline re-runs per consumer.
-    # The two snapshot materializations are independent -> concurrent
-    # driver-thread jobs (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _snap(excl: int):
-        return (
-            p.where(F.col("doc_id") % 10 != excl)
-            .select("passage_sha").distinct().localCheckpoint()
-        )
-
-    with ThreadPoolExecutor(2) as ex:
-        f_old, f_new = ex.submit(_snap, 0), ex.submit(_snap, 1)
-        old, new = f_old.result(), f_new.result()
+    # The two snapshot materializations are independent -> concurrent.
+    old, new = _checkpoint_concurrently(*(
+        p.where(F.col("doc_id") % 10 != excl).select("passage_sha").distinct()
+        for excl in (0, 1)
+    ))
     added = new.join(old, "passage_sha", "left_anti").agg(
         F.count("*").alias("n_shas")
     ).select(F.lit("added").alias("change"), "n_shas")
@@ -3817,21 +3775,37 @@ def q_minhash_calibration_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, scored = _minhash_prod_scored(
         spark, sf_dir, lambda x, y: F.when(x == y, 1).otherwise(0)
     )
+    return _calibration_contract(
+        corpus, scored, "jac", MINHASH_PROD_MIN_PAIRS, MINHASH_PROD_MAE_MAX,
+        MINHASH_PROD_MAXERR_MAX, MINHASH_PROD_BIAS_BAND,
+    )
+
+
+def _calibration_contract(
+    n_docs_of: DataFrame, scored: DataFrame, exact_col: str, min_pairs: int,
+    mae_max: float, maxerr_max: float, bias_band: float,
+) -> DataFrame:
+    """The sketch-calibration contract row shared by the production,
+    b-bit and ICWS calibrations: n_docs (the row count of `n_docs_of`,
+    the SQL-anchored half) plus the verdicts n_pairs_ok / mae_ok /
+    maxerr_ok / bias_ok over the error `est - exact_col` of the scored
+    pairs. The oracle is _SQL_CALIBRATION_CONTRACT."""
+    err = F.col("est") - F.col(exact_col)
     agg = scored.agg(
         F.count("*").alias("n_pairs"),
-        F.avg(F.abs(F.col("est") - F.col("jac"))).alias("mae"),
-        F.max(F.abs(F.col("est") - F.col("jac"))).alias("maxerr"),
-        F.avg(F.col("est") - F.col("jac")).alias("bias"),
+        F.avg(F.abs(err)).alias("mae"),
+        F.max(F.abs(err)).alias("maxerr"),
+        F.avg(err).alias("bias"),
     )
     return (
-        corpus.agg(F.count("*").alias("n_docs"))
+        n_docs_of.agg(F.count("*").alias("n_docs"))
         .crossJoin(agg)
         .select(
             "n_docs",
-            (F.col("n_pairs") >= MINHASH_PROD_MIN_PAIRS).alias("n_pairs_ok"),
-            (F.col("mae") <= MINHASH_PROD_MAE_MAX).alias("mae_ok"),
-            (F.col("maxerr") <= MINHASH_PROD_MAXERR_MAX).alias("maxerr_ok"),
-            (F.abs(F.col("bias")) <= MINHASH_PROD_BIAS_BAND).alias("bias_ok"),
+            (F.col("n_pairs") >= min_pairs).alias("n_pairs_ok"),
+            (F.col("mae") <= mae_max).alias("mae_ok"),
+            (F.col("maxerr") <= maxerr_max).alias("maxerr_ok"),
+            (F.abs(F.col("bias")) <= bias_band).alias("bias_ok"),
         )
     )
 
@@ -3902,7 +3876,10 @@ def _minhash_prod_scored(spark, sf_dir, agree_fn, correction=None):
     return corpus, scored
 
 
-SQL_MINHASH_CALIBRATION_PROD = """
+# Oracle of every _calibration_contract query: the estimator verdicts are
+# Spark-side (the sketches are not SQL-expressible), so SQL anchors n_docs
+# and asserts every verdict holds.
+_SQL_CALIBRATION_CONTRACT = """
 SELECT CAST(count(*) AS BIGINT) AS n_docs,
        true AS n_pairs_ok, true AS mae_ok, true AS maxerr_ok, true AS bias_ok
 FROM documents
@@ -3950,30 +3927,10 @@ def q_bbit_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda x, y: F.when(x.bitwiseAND(mask) == y.bitwiseAND(mask), 1).otherwise(0),
         correction=lambda raw: (raw - F.lit(c)) / F.lit(1.0 - c),
     )
-    agg = scored.agg(
-        F.count("*").alias("n_pairs"),
-        F.avg(F.abs(F.col("est") - F.col("jac"))).alias("mae"),
-        F.max(F.abs(F.col("est") - F.col("jac"))).alias("maxerr"),
-        F.avg(F.col("est") - F.col("jac")).alias("bias"),
+    return _calibration_contract(
+        corpus, scored, "jac", BBIT_MIN_PAIRS, BBIT_MAE_MAX, BBIT_MAXERR_MAX,
+        BBIT_BIAS_BAND,
     )
-    return (
-        corpus.agg(F.count("*").alias("n_docs"))
-        .crossJoin(agg)
-        .select(
-            "n_docs",
-            (F.col("n_pairs") >= BBIT_MIN_PAIRS).alias("n_pairs_ok"),
-            (F.col("mae") <= BBIT_MAE_MAX).alias("mae_ok"),
-            (F.col("maxerr") <= BBIT_MAXERR_MAX).alias("maxerr_ok"),
-            (F.abs(F.col("bias")) <= BBIT_BIAS_BAND).alias("bias_ok"),
-        )
-    )
-
-
-SQL_BBIT_MINHASH_CALIBRATION = """
-SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       true AS n_pairs_ok, true AS mae_ok, true AS maxerr_ok, true AS bias_ok
-FROM documents
-"""
 
 
 # ------------------------------------------------- weighted (multiset) ops
@@ -3982,20 +3939,8 @@ WJAC_DF_CAP = 64  # gram document-frequency cap (same role as NGRAM_DF_CAP)
 WJAC_THRESHOLD = 0.4
 
 
-def _grams3_all_of(t: Column) -> Column:
-    """word 3-gram array WITH repeats (the multiset _grams3_of distincts),
-    from an already-materialized token-array column (see _grams3_of)."""
-    return F.when(
-        F.size(t) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 3),
-            lambda i: F.concat_ws(" ", F.slice(t, i + 1, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _tf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tok, tf) 3-gram occurrence counts restricted to grams
+    """(doc_id, gram, tf) 3-gram occurrence counts restricted to grams
     appearing in <= WJAC_DF_CAP documents.
 
     The weighted space is the word-3-GRAM multiset, not raw tokens: a
@@ -4007,23 +3952,21 @@ def _tf_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is reused by the downstream self-join (operators/overlap.py).
     """
     tf = (
-        _docs(spark, sf_dir)
-        .select("doc_id", _tokens().alias("_t"))
-        .select("doc_id", F.explode(_grams3_all_of(F.col("_t"))).alias("tok"))
-        .groupBy("doc_id", "tok")
+        _gram_rows(_docs(spark, sf_dir), "doc_id", distinct=False)
+        .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("tf"))
     )
-    return df_capped(tf, "tok", WJAC_DF_CAP)
+    return df_capped(tf, "gram", WJAC_DF_CAP)
 
 
 def _weighted_pair_scores(tf: DataFrame) -> DataFrame:
-    """(a, b, na, nb, wmin, wjac) multiset-Jaccard scores over co-token
-    pairs of a (doc_id, tok, tf) table: wjac = sum(min tf)/sum(max tf),
+    """(a, b, na, nb, wmin, wjac) multiset-Jaccard scores over co-gram
+    pairs of a (doc_id, gram, tf) table: wjac = sum(min tf)/sum(max tf),
     with sum(max) = na + nb - sum(min) so only the intersection joins."""
     sizes = tf.groupBy("doc_id").agg(F.sum("tf").alias("sz"))
     l, r = tf.alias("l"), tf.alias("r")
     inter = (
-        l.join(r, "tok")
+        l.join(r, "gram")
         .where(F.col("l.doc_id") < F.col("r.doc_id"))
         .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .agg(F.sum(F.least("l.tf", "r.tf")).alias("wmin"))
@@ -4205,7 +4148,7 @@ def q_wminhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sa/sb) — three instantiations on different keys without this
     tf = _tf_capped(spark, sf_dir).localCheckpoint()
     grouped = (
-        tf.select("doc_id", F.xxhash64("tok").alias("th"), "tf")
+        tf.select("doc_id", F.xxhash64("gram").alias("th"), "tf")
         .groupBy("doc_id")
         .agg(F.collect_list("th").alias("ths"), F.collect_list("tf").alias("tfs"))
     )
@@ -4269,31 +4212,10 @@ def q_wminhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sam.select(F.col("doc_id").alias("b"), F.col("s").alias("sb")), "b")
         .select((agree / F.lit(ICWS_K)).alias("est"), "wjac")
     )
-    agg = scored.agg(
-        F.count("*").alias("n_pairs"),
-        F.avg(F.abs(F.col("est") - F.col("wjac"))).alias("mae"),
-        F.max(F.abs(F.col("est") - F.col("wjac"))).alias("maxerr"),
-        F.avg(F.col("est") - F.col("wjac")).alias("bias"),
+    return _calibration_contract(
+        _docs(spark, sf_dir), scored, "wjac", ICWS_MIN_PAIRS, ICWS_MAE_MAX,
+        ICWS_MAXERR_MAX, ICWS_BIAS_BAND,
     )
-    return (
-        _docs(spark, sf_dir)
-        .agg(F.count("*").alias("n_docs"))
-        .crossJoin(agg)
-        .select(
-            "n_docs",
-            (F.col("n_pairs") >= ICWS_MIN_PAIRS).alias("n_pairs_ok"),
-            (F.col("mae") <= ICWS_MAE_MAX).alias("mae_ok"),
-            (F.col("maxerr") <= ICWS_MAXERR_MAX).alias("maxerr_ok"),
-            (F.abs(F.col("bias")) <= ICWS_BIAS_BAND).alias("bias_ok"),
-        )
-    )
-
-
-SQL_WMINHASH_CALIBRATION = """
-SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       true AS n_pairs_ok, true AS mae_ok, true AS maxerr_ok, true AS bias_ok
-FROM documents
-"""
 
 
 def q_clone_type1_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4607,7 +4529,7 @@ QUERIES = {
     # r06-green, unchanged, transitively exercised by simhash_hamming_pairs
     # — rotated to the tail)
     "bbit_minhash_calibration": (
-        q_bbit_minhash_calibration, SQL_BBIT_MINHASH_CALIBRATION,
+        q_bbit_minhash_calibration, _SQL_CALIBRATION_CONTRACT,
     ),
     "components": (q_components, SQL_COMPONENTS),
     # incremental update must reproduce the batch answer exactly
@@ -4641,7 +4563,7 @@ QUERIES = {
         q_weighted_jaccard_pairs, SQL_WEIGHTED_JACCARD_PAIRS,
     ),
     # contract oracle (n_docs anchor + verdicts), like minhash_calibration_prod
-    "wminhash_calibration": (q_wminhash_calibration, SQL_WMINHASH_CALIBRATION),
+    "wminhash_calibration": (q_wminhash_calibration, _SQL_CALIBRATION_CONTRACT),
     "rename_candidates": (q_rename_candidates, SQL_RENAME_CANDIDATES),
     "clone_type1_groups": (q_clone_type1_groups, SQL_CLONE_TYPE1_GROUPS),
     # contract oracle (n_docs anchor + invariant verdicts; chunker not SQL)
@@ -4680,7 +4602,7 @@ QUERIES = {
     "minhash_calibration": (q_minhash_calibration, SQL_MINHASH_CALIBRATION),
     # NEW round 7: est-vs-exact contract on the PRODUCTION 128-perm family
     "minhash_calibration_prod": (
-        q_minhash_calibration_prod, SQL_MINHASH_CALIBRATION_PROD,
+        q_minhash_calibration_prod, _SQL_CALIBRATION_CONTRACT,
     ),
     "passage_delta": (q_passage_delta, SQL_PASSAGE_DELTA),
     # ---------------- driver-gate window boundary (50) ----------------

@@ -13,8 +13,9 @@ State layout under `state_dir`:
   base/upto=<id>/      compacted totals covering all batches <= id
 
 Per trigger (cost O(batch), never O(history)):
-  1. batch docs -> distinct (doc, gram) -> groupBy gram count — map-side
-     explode + ONE partial-agg shuffle on the gram key;
+  1. queries.ngram_doc_counts(batch) — the batch query's own distinct
+     (doc, gram) -> groupBy gram count: map-side explode + ONE
+     partial-agg shuffle on the gram key;
   2. the delta OVERWRITES deltas/batch=<id> — an at-least-once replay
      rewrites the same partition (idempotent, the repo's standard
      batch-keyed-write discipline);
@@ -51,27 +52,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libchunk_spark.streaming.ingest import CORPUS_SCHEMA
-
-
-def _word5_gram_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(ngram, n_docs) — DISTINCT containing-doc counts, the exact gram
-    definition of queries.q_top_ngrams (word 5-grams, array_distinct per
-    doc)."""
-    t = F.split(F.col(text_col), " ")
-    grams = F.when(
-        F.size(t) >= 5,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - 5),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, 5)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        docs.select(F.col(id_col), F.explode(grams).alias("ngram"))
-        .groupBy("ngram")
-        .agg(F.count("*").alias("n_docs"))
-    )
 
 
 def _committed(root: str, pattern: str) -> list[int]:
@@ -293,7 +273,6 @@ def start_topgrams_maintenance(
     state_dir: str,
     checkpoint_dir: str,
     compact_every: int = 4,
-    id_col: str = "file_id",
     text_col: str = "content",
 ):
     """Stream corpus parquet files from source_dir, maintaining the
@@ -303,8 +282,10 @@ def start_topgrams_maintenance(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
+        from libchunk_spark.queries import ngram_doc_counts
+
         ss = batch.sparkSession
-        delta = _word5_gram_counts(batch, id_col, text_col)
+        delta = ngram_doc_counts(batch, text_col)
         delta.write.mode("overwrite").parquet(
             os.path.join(state_dir, f"deltas/batch={batch_id}")
         )

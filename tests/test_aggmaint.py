@@ -9,10 +9,10 @@ import os
 from pyspark.sql import functions as F
 
 from libchunk_spark.fixtures import corpus_to_spark, generate_corpus
+from libchunk_spark.queries import ngram_doc_counts
 from libchunk_spark.streaming.aggmaint import (
     _base_uptos,
     _delta_batches,
-    _word5_gram_counts,
     read_topgrams,
     start_topgrams_maintenance,
     vacuum_deltas,
@@ -20,9 +20,10 @@ from libchunk_spark.streaming.aggmaint import (
 
 
 def _batch_top(spark, df, n=20):
+    """Top grams by the registry's own definition (the q_top_ngrams core)."""
     return [
         (r["ngram"], r["n_docs"])
-        for r in _word5_gram_counts(df, "file_id", "content")
+        for r in ngram_doc_counts(df, "content")
         .orderBy(F.desc("n_docs"), F.asc("ngram"))
         .limit(n)
         .collect()

@@ -1,13 +1,15 @@
 """Late-round-7 operators: Manku blocked-Hamming simhash pairs and the
 Bayardo prefix-filter exact all-pairs join — completeness (both are
 EXACT-recall operators, so brute force is the oracle), pruning
-effectiveness, and the exchange-reuse plan shapes the docstrings claim."""
+effectiveness, and the exchange-reuse plan shapes the docstrings claim;
+plus the job group of the registry's concurrent checkpoints."""
 
 from __future__ import annotations
 
 import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from libchunk_spark import queries as Q
@@ -169,10 +171,9 @@ def test_allpairs_prefix_actually_prunes(spark):
     """The candidate set must be a strict subset of all doc pairs (the
     entire point of prefix filtering) while still covering every true
     pair — measured on the real sf0.001 corpus."""
-    toks = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .select("doc_id", F.explode(Q._grams3()).alias("tok"))
-    )
+    toks = Q._gram_rows(
+        spark.read.parquet(f"{SF}/documents.parquet"), "doc_id"
+    ).withColumnRenamed("gram", "tok")
     n_docs = toks.select("doc_id").distinct().count()
     cand = prefix_candidates(toks, Q.ALLPAIRS_THRESHOLD)
     n_cand = cand.count()
@@ -268,3 +269,30 @@ def test_allpairs_reuses_the_prefix_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     assert "isFinalPlan=true" in plan, plan
     assert "ReusedExchange" in plan, plan
+
+
+# ------------------------------------------------- concurrent checkpoints
+
+
+@pytest.mark.parametrize(
+    "query", [Q.q_lsh_eval_metrics, Q.q_passage_delta, Q.q_topk_ivf]
+)
+def test_concurrent_checkpoints_keep_the_callers_job_group(spark, query):
+    """Building these queries checkpoints two frames on driver threads.
+    Every job that starts meanwhile must carry the caller's job group, or
+    per-query job tags and descriptions miss it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"build-{query.__name__}"
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        query(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup(group)
+    stray = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not stray, f"jobs {sorted(stray)} ran outside group {group}"
