@@ -21,10 +21,11 @@ Layout under `index_path`:
 Both big tables are PARTITIONED BY CELL, so a query's `nprobe` cell
 choice prunes at the FILE level on both the ADC scan and the rerank read
 (plan-asserted in tests) — the parquet analog of probing inverted lists.
-Build determinism: training samples are hash-mod filtered and seeded
-(similarity.train_centroids, pq.pq_train), so `index_topk` on a persisted
-index reproduces `pq.pq_topk_ivf` on the same inputs exactly — pinned by
-an equality test, not just a recall floor.
+Build determinism: the build calls the same trainers as `pq.pq_topk_ivf`
+(similarity.train_centroids, pq.pq_train), whose samples are hash-mod
+filtered and seeded, so `index_topk` on a persisted index reproduces
+`pq.pq_topk_ivf` on the same inputs exactly — pinned by an equality test,
+not just a recall floor.
 """
 
 from __future__ import annotations
@@ -48,8 +49,8 @@ from libchunk_spark.operators.pq import (
 )
 from libchunk_spark.operators.similarity import (
     _collect_matrix,
-    _train,
     ivf_assign,
+    train_centroids,
 )
 
 
@@ -63,13 +64,12 @@ def build_ivfpq_index(
     iters: int = 10,
     kmeans_iters: int = 8,
     seed: int = 7,
-    train: str = "sample",
 ) -> dict:
     """Train + encode + assign once; persist every artifact. Returns the
     meta dict (also written to meta.json)."""
     spark = emb.sparkSession
     books = pq_train(emb, m=m, n_codes=n_codes, iters=iters, seed=seed)
-    centroids = _train(emb, n_cells, kmeans_iters, seed, train)
+    centroids = train_centroids(emb, n_cells, kmeans_iters, seed)
     cells = ivf_assign(emb, centroids, nprobe=index_probe).select(
         "vec_id", "cell"
     )
@@ -107,7 +107,6 @@ def build_ivfpq_index(
         "index_probe": index_probe,
         "dim": int(centroids.shape[1]),
         "seed": seed,
-        "train": train,
     }
     tmp = os.path.join(index_path, "meta.json.tmp")
     with open(tmp, "w") as f:

@@ -10,8 +10,9 @@ lookups — no float vector ever touched at scan time.
 
 Pipeline shape (everything distributed except bounded driver state):
   1. pq_train   — per-subspace Lloyd k-means on a bounded hash-mod sample
-                  (O(n_codes*64) rows driver-side at any corpus scale, same
-                  policy as similarity.train_centroids);
+                  (O(n_codes*64) rows driver-side at any corpus scale; the
+                  sample comes from similarity._training_sample, the same
+                  one similarity.train_centroids draws its rows from);
   2. pq_encode  — mapInPandas argmax over the broadcast codebooks: the
                   persistent, scannable artifact is (vec_id, codes);
   3. pq_topk    — queries' ADC LUTs broadcast (gated — retrieval batches are
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 from libchunk_spark.operators.similarity import (
     _collect_matrix,
     _round4,
+    _training_sample,
     ivf_assign,
     train_centroids,
 )
@@ -66,17 +68,7 @@ def pq_train(
 ) -> np.ndarray:
     """(m, n_codes, dim/m) codebooks from per-subspace Lloyd k-means on a
     bounded deterministic sample of the (normalized) vectors."""
-    want = n_codes * 64
-    total = emb.count()
-    if total > want:
-        mod = max(total // want, 1)
-        sample = emb.where(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0)
-    else:
-        sample = emb
-    _, mat = _collect_matrix(
-        sample.select("vec_id", "embedding"), max_rows=max(want * 2, 1024)
-    )
-    mat = _normalize(mat)
+    mat = _normalize(_training_sample(emb, n_codes * 64))
     dim = mat.shape[1]
     if dim % m:
         raise ValueError(f"m={m} must divide dim={dim}")

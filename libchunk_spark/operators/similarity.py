@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from libchunk_spark.operators.overlap import capped_star_pairs
 
 # Hard ceiling on rows the brute-force baseline may pull to the driver.
 # 200k × 128-dim float64 ≈ 200 MB broadcast — the outer edge of sane.
@@ -249,71 +250,31 @@ def signlsh_pairs(
 ) -> DataFrame:
     """Bounded sign-LSH ANN pairs (a, b, sim), a < b, exact-cosine verified.
 
-    The intra-bucket self-join is gated by a bucket-size count: buckets
-    <= `bucket_cap` emit all pairs; oversized buckets degrade to
+    Buckets run through `overlap.capped_star_pairs`: buckets <=
+    `bucket_cap` emit all pairs; oversized buckets degrade to
     connectivity-preserving star edges around the bucket's min vec_id
-    (linear in bucket size) — the same cap+star+observe policy as
-    operators/lsh.py's band buckets, closing the Θ(n²/2^n_bits) worst case
-    real embeddings hit when sign patterns concentrate. Pass a
-    ``pyspark.sql.Observation`` to record `oversized_rows` /
-    `oversized_blocks` when the plan executes (a missing metric under AQE
-    empty-relation propagation means zero degradation). Every surviving
-    candidate is verified with exact cosine >= threshold JVM-side.
+    (linear in bucket size). It is the one cap+star+observe kernel that
+    operators/lsh.py's SimHash blocks use too, and it closes the
+    Θ(n²/2^n_bits) worst case real embeddings hit when sign patterns
+    concentrate. Pass a ``pyspark.sql.Observation`` to record
+    `oversized_rows` / `oversized_blocks` when the plan executes (a missing
+    metric under AQE empty-relation propagation means zero degradation).
+    Every surviving candidate is verified with exact cosine >= threshold
+    JVM-side.
 
     Reference analog: bits.Move's bounded remote probe (bits/move.go:84-88)
     — never enumerate an unbounded set when an index tells you it is hot.
     """
-    from pyspark.sql import Window
-
-    # bucket size as a window count over the (tbl, bucket) partition — ONE
-    # exchange that every downstream branch reuses (ReusedExchange), same
-    # pattern as the ngram df-cap; a groupBy+count+join here re-shuffled the
-    # bucket subtree per branch (and a constant tbl in single-table mode is
-    # folded out of the join keys, so an explicit repartition on
-    # (tbl, bucket) never even satisfied the joins' requirements)
-    rows = signlsh_buckets(emb, n_bits, n_tables, seed)
-    sized = rows.withColumn(
-        "sz", F.count("*").over(Window.partitionBy("tbl", "bucket"))
+    cand = capped_star_pairs(
+        signlsh_buckets(emb, n_bits, n_tables, seed),
+        "vec_id",
+        ["tbl", "bucket"],
+        "v",
+        bucket_cap,
+        observation,
     )
-    small = sized.where(F.col("sz") <= bucket_cap).drop("sz")
-    big = sized.where(F.col("sz") > bucket_cap).drop("sz")
-    if observation is not None:
-        big = big.observe(
-            observation,
-            F.count(F.lit(1)).alias("oversized_rows"),
-            F.approx_count_distinct(
-                F.concat_ws(":", "tbl", "bucket")
-            ).alias("oversized_blocks"),
-        )
-    l, r = small.alias("l"), small.alias("r")
-    pair_cand = (
-        l.join(r, ["tbl", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("a"),
-            F.col("r.vec_id").alias("b"),
-            F.col("l.v").alias("va"),
-            F.col("r.v").alias("vb"),
-        )
-    )
-    # star degrade: rep = min vec_id (so a < b holds); min(struct) carries
-    # the rep's vector through one partial-agg-friendly groupBy
-    big_reps = big.groupBy("tbl", "bucket").agg(
-        F.min(F.struct("vec_id", "v")).alias("rep")
-    )
-    star_cand = (
-        big.join(big_reps, ["tbl", "bucket"])
-        .where(F.col("vec_id") != F.col("rep.vec_id"))
-        .select(
-            F.col("rep.vec_id").alias("a"),
-            F.col("vec_id").alias("b"),
-            F.col("rep.v").alias("va"),
-            F.col("v").alias("vb"),
-        )
-    )
-    cand = pair_cand.unionByName(star_cand).dropDuplicates(["a", "b"])
     dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
+        F.zip_with(F.col("ca"), F.col("cb"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -325,11 +286,33 @@ def signlsh_pairs(
             "a",
             "b",
             F.round(
-                dot / (norm(F.col("va")) * norm(F.col("vb"))), 4
+                dot / (norm(F.col("ca")) * norm(F.col("cb"))), 4
             ).alias("sim"),
         )
         .where(F.col("sim") >= threshold)
     )
+
+
+def _training_sample(emb: DataFrame, want: int) -> np.ndarray:
+    """The embeddings of a deterministic ~`want`-row sample, vec_id order.
+
+    Hash-mod filter on xxhash64(vec_id): no global sort, no partition-order
+    dependence, so every trainer sees the same rows on every run. Shared by
+    the IVF centroid trainer and the PQ codebook trainer.
+    """
+    total = emb.count()
+    if total > want:
+        mod = max(total // want, 1)
+        sample = emb.where(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0)
+    else:
+        sample = emb
+    # mod = total//want truncates, so the hash-mod sample yields between
+    # `want` and ~2*want rows — size the collect gate to the sample, not to
+    # BRUTE_FORCE_MAX_ROWS (large n_cells would otherwise refuse to train)
+    _, mat = _collect_matrix(
+        sample.select("vec_id", "embedding"), max_rows=max(want * 2, 1024)
+    )
+    return mat
 
 
 def train_centroids(
@@ -347,19 +330,7 @@ def train_centroids(
     scale). Assignment of the FULL table stays distributed (ivf_assign);
     only the (n_cells, dim) centroid matrix is broadcast.
     """
-    # deterministic distributed sample: hash-mod filter on xxhash64(vec_id)
-    want = n_cells * 64
-    total = emb.count()
-    if total > want:
-        mod = max(total // want, 1)
-        sample = emb.where(F.pmod(F.xxhash64("vec_id"), F.lit(mod)) == 0)
-    else:
-        sample = emb
-    sample = sample.select("vec_id", "embedding")
-    # mod = total//want truncates, so the hash-mod sample yields between
-    # `want` and ~2*want rows — size the collect gate to the sample, not to
-    # BRUTE_FORCE_MAX_ROWS (large n_cells would otherwise refuse to train)
-    ids, mat = _collect_matrix(sample, max_rows=max(want * 2, 1024))
+    mat = _training_sample(emb, n_cells * 64)
     rng = np.random.default_rng(seed)
     centroids = mat[rng.choice(len(mat), size=min(n_cells, len(mat)), replace=False)]
 
@@ -372,20 +343,6 @@ def train_centroids(
             new_c[c] = mat[cell == c].mean(axis=0)
         centroids = new_c
     return centroids
-
-
-def _train(
-    emb: DataFrame, n_cells: int, iters: int, seed: int, train: str
-) -> np.ndarray:
-    """Trainer dispatch: "sample" (bounded driver sample, default) or
-    "parallel" (distributed k-means||, operators/kmeans.py)."""
-    if train == "parallel":
-        from libchunk_spark.operators.kmeans import train_centroids_parallel
-
-        return train_centroids_parallel(emb, n_cells, seed=seed)
-    if train == "sample":
-        return train_centroids(emb, n_cells, iters, seed)
-    raise ValueError(f"unknown train mode {train!r}")
 
 
 def ivf_assign(
@@ -431,7 +388,6 @@ def ivf_pairs(
     iters: int = 4,
     seed: int = 7,
     nprobe: int = 3,
-    train: str = "sample",
 ) -> DataFrame:
     """ANN cosine pairs: exact cosine within each (multi-probed) IVF cell.
 
@@ -440,13 +396,8 @@ def ivf_pairs(
     overlap). Cells are processed via repartition("cell") + applyInPandas so
     each cell's matmul is local to one task; duplicate pairs from multi-
     probe are removed with dropDuplicates.
-
-    train="parallel" switches centroid training to the fully distributed
-    k-means|| path (operators/kmeans.py) — same (n_cells, dim) output,
-    driver memory O(n_cells) instead of O(n_cells * 64): the knob for
-    very large n_cells (SCALE.md known-limits row, now closed).
     """
-    centroids = _train(emb, n_cells, iters, seed, train)
+    centroids = train_centroids(emb, n_cells, iters, seed)
     assigned = ivf_assign(emb, centroids, nprobe=nprobe)
 
     cut = threshold - 5.1e-5  # see brute_force_pairs: round survivors only
@@ -490,7 +441,6 @@ def topk_ivf(
     seed: int = 7,
     nprobe: int = 3,
     index_probe: int = 2,
-    train: str = "sample",
 ) -> DataFrame:
     """IVF-probed top-k retrieval: (q, cand, sim, rank), rank <= k.
 
@@ -514,7 +464,7 @@ def topk_ivf(
     """
     from pyspark.sql import Window
 
-    centroids = _train(emb, n_cells, iters, seed, train)
+    centroids = train_centroids(emb, n_cells, iters, seed)
     cands = ivf_assign(emb, centroids, nprobe=index_probe).withColumn(
         "is_query", F.lit(False)
     )

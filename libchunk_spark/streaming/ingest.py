@@ -439,6 +439,7 @@ def _incremental_cluster_batch(
         connected_components,
         update_components,
     )
+    from libchunk_spark.operators.lsh import minhash_candidate_edges
     from libchunk_spark.operators.sign import sign
 
     sig_root = _os.path.join(state_dir, "signatures")
@@ -454,12 +455,9 @@ def _incremental_cluster_batch(
     new_bands = sigs.select(
         "file_id", F.posexplode("bands").alias("band", "band_hash")
     )
-    l, r = new_bands.alias("l"), new_bands.alias("r")
-    edges = (
-        l.join(r, ["band", "band_hash"])
-        .where(F.col("l.file_id") < F.col("r.file_id"))
-        .select(F.col("l.file_id").alias("a"), F.col("r.file_id").alias("b"))
-    )
+    # new↔new: the batch pipeline's star edges (linear in a hot in-batch
+    # bucket, same components as the bucket's all-pairs self-join)
+    edges = minhash_candidate_edges(sigs)
     new_nodes = batch.select("file_id")
     if _os.path.exists(bands_root):
         edges = edges.unionByName(
@@ -507,8 +505,8 @@ def start_incremental_clustering(
     (the current assignment). Per batch:
       1. sign the new files (map-only, ONE content pass, localCheckpointed
          and reused by every consumer);
-      2. candidate edges touching the batch: new↔new via an in-batch band
-         self-join, new↔old via _cross_edges against the maintained band
+      2. candidate edges touching the batch: new↔new as the batch
+         pipeline's star edges (lsh.minhash_candidate_edges), new↔old via _cross_edges against the maintained band
          index (broadcast probe of the batch's band keys; bands hotter
          than `band_freq_cap` among old files are skipped — the same guard
          as start_neardup_flagging; per-trigger shuffle work is

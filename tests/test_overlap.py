@@ -1,12 +1,19 @@
-"""The key-overlap pair-join kernel (operators/overlap.py) against a Python
-brute force on tiny frames, plus the exchange reuse its docstring claims."""
+"""The key-overlap pair-join kernels (operators/overlap.py) against a Python
+brute force on tiny frames, plus the exchange reuse their docstring claims."""
 
 from __future__ import annotations
 
+import dataclasses
 from collections import Counter
 from itertools import combinations
 
+import numpy as np
+from pyspark.sql import Observation
+
+from libchunk_spark.config import CORPUS_PIPELINE_CONFIG
+from libchunk_spark.operators.lsh import simhash_candidate_edges
 from libchunk_spark.operators.overlap import (
+    capped_star_pairs,
     df_capped,
     key_pairs,
     shared_counts,
@@ -122,3 +129,85 @@ def test_capped_self_join_exchanges_the_key_once(spark):
     assert kinds == Counter({"Exchange hashpartitioning": 2, "ReusedExchange": 1}), plan
     reused = [ln for ln in plan.splitlines() if "ReusedExchange" in ln]
     assert "Exchange hashpartitioning(k#" in reused[0], plan
+
+
+# (id, band, h) rows for capped_star_pairs with cap CAP: key (0, 1) is held
+# by exactly CAP ids (all pairs), (0, 2) by CAP + 1 (star from 4), (1, 2) by
+# CAP + 2 (star from 2); (1, 3) repeats the star edge (4, 5) as a small-key
+# pair and (1, 4) is a single-row key
+STAR_ROWS = [
+    (1, 0, 1), (2, 0, 1), (3, 0, 1),
+    (4, 0, 2), (5, 0, 2), (6, 0, 2), (7, 0, 2),
+    (9, 1, 2), (8, 1, 2), (5, 1, 2), (6, 1, 2), (2, 1, 2),
+    (4, 1, 3), (5, 1, 3),
+    (3, 1, 4),
+]
+
+
+def _carry(i):
+    return f"c{i}"
+
+
+def _brute_star(rows, cap):
+    by_key: dict[tuple, set] = {}
+    for r in rows:
+        by_key.setdefault(r[1:], set()).add(r[0])
+    out = set()
+    for ids in by_key.values():
+        ids = sorted(ids)
+        if len(ids) <= cap:
+            out |= set(combinations(ids, 2))
+        else:
+            out |= {(ids[0], b) for b in ids[1:]}
+    return {(a, b, _carry(a), _carry(b)) for a, b in out}
+
+
+def _star_frame(spark):
+    return spark.createDataFrame(
+        [(i, band, h, _carry(i)) for i, band, h in STAR_ROWS],
+        "id long, band int, h long, c string",
+    )
+
+
+def test_capped_star_pairs_matches_brute_force(spark):
+    got = [
+        tuple(r)
+        for r in capped_star_pairs(
+            _star_frame(spark), "id", ["band", "h"], "c", CAP
+        ).collect()
+    ]
+    assert len(got) == len(set(got))  # the union is deduplicated
+    assert set(got) == _brute_star(STAR_ROWS, CAP)
+    pairs = {(a, b) for a, b, _, _ in got}
+    assert {(1, 2), (1, 3), (2, 3)} <= pairs  # at the cap: every pair
+    assert {(4, 5), (4, 6), (4, 7)} <= pairs  # cap + 1: star through min id
+    assert not {(5, 6), (5, 7), (6, 7)} & pairs
+    assert all(a < b for a, b in pairs)
+
+
+def test_capped_star_pairs_observes_oversized_keys(spark):
+    obs = Observation("capped_star")
+    capped_star_pairs(
+        _star_frame(spark), "id", ["band", "h"], "c", CAP, observation=obs
+    ).collect()
+    # keys (0, 2) and (1, 2): CAP + 1 and CAP + 2 rows
+    assert obs.get == {"oversized_rows": 2 * CAP + 3, "oversized_blocks": 2}
+
+
+def test_simhash_edges_exchange_the_block_key_once(spark):
+    """The SimHash path sizes its blocks with the kernel's window count:
+    the pre-execution plan has at most 5 hash exchanges (a groupBy + join
+    sizing plans 9)."""
+    cfg = dataclasses.replace(CORPUS_PIPELINE_CONFIG, bucket_pair_cap=16)
+    rng = np.random.default_rng(5)
+    vals = rng.integers(-(1 << 63), (1 << 63) - 1, size=300, dtype=np.int64)
+    same = 0x0123456789ABCDEF
+    rows = [(i, int(v)) for i, v in enumerate(vals)]
+    rows += [(300 + i, same) for i in range(50)]
+    sigs = spark.createDataFrame(rows, "file_id long, simhash long")
+    edges = simhash_candidate_edges(sigs, cfg)
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert exchange_kinds(plan)["Exchange hashpartitioning"] <= 5, plan
+    # the 50 identical simhashes overflow every block: one star from 300
+    got = {tuple(r) for r in edges.collect()}
+    assert got == {(300, 300 + i) for i in range(1, 50)}

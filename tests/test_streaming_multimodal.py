@@ -1,4 +1,4 @@
-"""Structured Streaming ingest + multimodal plumbing tests."""
+"""Structured Streaming ingest, sessionization and cluster maintenance tests."""
 
 from __future__ import annotations
 
@@ -9,13 +9,6 @@ from pyspark.sql import functions as F
 
 from libchunk_spark.config import CORPUS_PIPELINE_CONFIG as CFG
 from libchunk_spark.fixtures import corpus_to_spark, generate_corpus
-from libchunk_spark.operators.multimodal import (
-    encode_fake_media,
-    extract_features,
-    media_keys,
-    resize_images,
-    sample_frames,
-)
 from libchunk_spark.streaming.ingest import start_ingest
 
 
@@ -151,60 +144,6 @@ def test_streaming_incremental_clustering_matches_batch(spark, tmp_path):
     assert got == want
     # the signature index accumulated every file exactly once
     assert spark.read.parquet(f"{state}/signatures").count() == 60
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (i, mod, encode_fake_media(mod, 32, 16, seed=i % 7, n_frames=4 if mod == "vid" else 1),
-         ("fake", 32, 16, 1000))
-        for i, mod in enumerate(["img", "img", "vid", "aud", "img", "vid"])
-    ]
-    return spark.createDataFrame(
-        rows,
-        "media_id long, modality string, media binary, "
-        "meta struct<format:string, width:int, height:int, duration_ms:int>",
-    ).cache()
-
-
-def test_media_exact_dedup_keys(media):
-    keys = media_keys(media)
-    assert keys.count() == 6
-    # seeds repeat (i % 7 over 6 rows -> all distinct seeds) but two img rows
-    # with same seed+dims would collide; verify key determinism instead
-    k0 = keys.where("media_id = 0").first()["k"]
-    assert len(k0) == 64
-
-
-def test_extract_features_shapes(media):
-    feats = extract_features(media).collect()
-    assert len(feats) == 6
-    for r in feats:
-        assert r["width"] == 32 and r["height"] == 16
-        assert len(r["intensity_hist"]) == 8
-        assert 0 <= r["mean_intensity"] <= 255
-        assert r["n_frames"] == (4 if r["modality"] == "vid" else 1)
-
-
-def test_resize_and_frame_sample(media):
-    resized = resize_images(media, 8, 4).collect()
-    assert all(len(r["resized"]) == 32 for r in resized)
-    frames = sample_frames(media.where("modality = 'vid'"), every_n=2)
-    got = frames.collect()
-    # 2 videos x frames {0, 2}
-    assert sorted((r["media_id"], r["frame_no"]) for r in got) == [
-        (2, 0), (2, 2), (5, 0), (5, 2),
-    ]
-
-
-def test_real_codec_raises_not_implemented(spark):
-    df = spark.createDataFrame(
-        [(1, "img", b"\x89PNG\r\n...", None)],
-        "media_id long, modality string, media binary, "
-        "meta struct<format:string, width:int, height:int, duration_ms:int>",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|FAKE|stub"):
-        extract_features(df).collect()
 
 
 def test_streaming_windowed_agg_matches_batch(spark, tmp_path):
